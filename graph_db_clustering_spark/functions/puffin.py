@@ -11,10 +11,10 @@ Puffin layout:
   snapshot-id, sequence-number, offset, length, properties}, ...],
   "properties": {...}}`` — offsets are absolute file positions.
 - FooterPayloadSize is a 4-byte little-endian int; Flags is 4 bytes
-  (bit 0 of byte 0: payload LZ4-frame-compressed — READ support via
-  functions/lz4; the writer emits uncompressed). Blob-level
-  `compression-codec` lz4/zstd decode through the repo's own frame
-  codecs; unknown codecs gate loudly.
+  (bit 0 of byte 0: payload LZ4-frame-compressed — read support only;
+  the writer emits uncompressed). Blob-level `compression-codec`
+  lz4/zstd frames decode through pyarrow's codecs; unknown codecs gate
+  loudly.
 
 delete-vector-v1 blob layout (format v3 deletion vectors): the blob
 deliberately matches ONE Delta Lake deletion-vector record so DV
@@ -41,6 +41,8 @@ import json
 import struct
 import zlib
 
+import pyarrow as pa
+
 from graph_db_clustering_spark.functions.roaring import (
     decode_rbm_array,
     encode_rbm_array,
@@ -51,6 +53,14 @@ MAGIC = b"PFA1"
 
 class PuffinError(ValueError):
     pass
+
+
+def _frame_decompress(data: bytes, codec: str) -> bytes:
+    """One lz4 or zstd frame -> its content; corrupt input is a PuffinError."""
+    try:
+        return pa.CompressedInputStream(pa.BufferReader(data), codec).read()
+    except OSError as e:
+        raise PuffinError(f"puffin: corrupt {codec} frame ({e})")
 
 
 def write_puffin(
@@ -110,11 +120,7 @@ def read_puffin(path: str) -> tuple[dict, bytes]:
         raise PuffinError("puffin: footer start magic missing")
     payload = raw[start : start + size]
     if flags[0] & 0x01:  # footer payload LZ4-frame-compressed
-        from graph_db_clustering_spark.functions.lz4 import (
-            frame_decompress,
-        )
-
-        payload = frame_decompress(payload)
+        payload = _frame_decompress(payload, "lz4")
     footer = json.loads(payload.decode("utf-8"))
     return footer, raw
 
@@ -125,16 +131,8 @@ def puffin_blob(raw: bytes, entry: dict) -> bytes:
     codec = entry.get("compression-codec")
     if not codec:
         return body
-    if codec == "lz4":  # single LZ4 frame per the spec
-        from graph_db_clustering_spark.functions.lz4 import (
-            frame_decompress,
-        )
-
-        return frame_decompress(body)
-    if codec == "zstd":  # single zstd frame
-        from graph_db_clustering_spark.functions.zstd import decompress
-
-        return decompress(body)
+    if codec in ("lz4", "zstd"):  # a single frame per the spec
+        return _frame_decompress(body, codec)
     raise NotImplementedError(
         f"puffin: blob compression-codec {codec!r} not supported"
     )

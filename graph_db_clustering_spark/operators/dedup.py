@@ -609,12 +609,6 @@ def build_band_index(
     return buckets, shingles
 
 
-def release_index_cache() -> None:
-    """Unpersist the signature frame pinned by the most recent
-    build_band_index(cache=True) call."""
-    pins.release("band_index")
-
-
 def release_signature_cache() -> None:
     """Unpersist the signature frame pinned by the most recent
     near_dups_against(cache=True) call. Safe at any time: Spark

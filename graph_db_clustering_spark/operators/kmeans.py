@@ -199,6 +199,8 @@ def fit(
     """
     pts = points.select(id_col, vec_col).cache()
     assign_pts = pts
+    assignments = None
+    prev_assignments = None
     try:
         centroids = init_centroids(pts, id_col, vec_col, k).localCheckpoint(eager=False)
         # cosine fast path: normalize points ONCE (cached) and the k centroids
@@ -211,8 +213,6 @@ def fit(
             assign_pts = pts.select(id_col, unit(F.col(vec_col)).alias(vec_col)).cache()
         prev_counts: dict | None = None
         history: list[dict] = []
-        assignments = None
-        prev_assignments = None
         converged = False
         it = 0
         for it in range(1, max_iter + 1):
@@ -259,6 +259,12 @@ def fit(
         if assignments is not None:
             pins.adopt("kmeans_assignments", assignments)
         return KMeansResult(centroids, assignments, it, converged, history)
+    except BaseException:
+        # a failed iteration leaves no result to own the pins
+        for a in (assignments, prev_assignments):
+            if a is not None:
+                a.unpersist()
+        raise
     finally:
         if assign_pts is not pts:
             assign_pts.unpersist()

@@ -27,11 +27,6 @@ def tokens(text: Column) -> Column:
     return F.split(F.lower(F.trim(text)), r"\s+")
 
 
-def token_count(text: Column) -> Column:
-    """Whitespace token count."""
-    return F.size(tokens(text))
-
-
 def bpe_ish_token_count(text: Column) -> Column:
     """BPE-flavored token estimate: alpha runs count ~1 token per 4 chars
     (ceil), digits and other symbols 1 each — a deterministic regex

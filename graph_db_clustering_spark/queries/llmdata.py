@@ -1107,9 +1107,8 @@ def avro_nested(spark, sf_dir):
     (freq), an enum (parity) and a fixed(16) (the md5 digest bytes) —
     then decodes back through the Arrow-batched distributed reader into
     native Spark array/map/struct/binary columns. The containers use
-    the SNAPPY codec (pure-Python functions/snappy + the Avro CRC32
-    trailer — round 7, closing the last Avro codec gate), so this
-    oracle also proves that whole path. Ground-truth oracle: every
+    the SNAPPY codec (pyarrow's snappy + the Avro CRC32 trailer), so
+    this oracle also proves that whole path. Ground-truth oracle: every
     projected scalar must equal the closed form DuckDB computes
     directly on the source table."""
     import hashlib

@@ -12,12 +12,11 @@ need no native library.
 Scope: record schemas over the primitive types, nullable unions, and —
 round 7 — the full complex-type set: nested records, arrays, maps,
 enums, fixed, and named-type references (a record/enum/fixed defined
-once and referenced by name later in the schema), plus all three
-spec codecs: null, deflate, snappy, bzip2, xz, and — round 11 —
-zstandard (snappy via the pure-Python functions/snappy block codec
-with the Avro-mandated big-endian CRC32-of-uncompressed trailer
-verified per block; zstandard via the pure-Python RFC 8878 frame
-decoder functions/zstd, cross-checked against libzstd), and general unions via the public spark-avro mapping
+once and referenced by name later in the schema), plus all six
+spec codecs: null, deflate, snappy, bzip2, xz and zstandard (snappy
+and zstandard through pyarrow's bundled C++ codecs, with the
+Avro-mandated big-endian CRC32-of-uncompressed trailer verified per
+snappy block), and general unions via the public spark-avro mapping
 convention ({int,long} promotes to long, {float,double} to double,
 anything else becomes struct<member0, member1, ...> over the non-null
 branches). The one remaining gate, loud and scoped: recursive type
@@ -37,6 +36,7 @@ import zlib
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -585,17 +585,42 @@ def decode_container(
         return fields, _decode_blocks(blob, fields, codec, sync, pos)
     except (IndexError, struct.error, UnicodeDecodeError) as e:
         raise AvroError(f"avro: truncated or corrupt data block ({e!r})")
-    except Exception as e:
-        import zlib as _z
+    except zlib.error as e:
+        raise AvroError(f"avro: corrupt deflate block ({e!r})")
 
-        if isinstance(e, _z.error):
-            raise AvroError(f"avro: corrupt deflate block ({e!r})")
-        raise
+
+def _snappy_decompress(block: bytes) -> bytes:
+    """One Avro snappy block: a raw-snappy body plus the 4-byte
+    big-endian CRC32 of the UNCOMPRESSED data (Avro spec, file container
+    codecs), verified here."""
+    if len(block) < 4:
+        raise AvroError("avro: snappy block shorter than its CRC")
+    body, crc = block[:-4], int.from_bytes(block[-4:], "big")
+    # the body opens with its uncompressed length: an unsigned varint of
+    # at most 5 bytes (a 32-bit value)
+    n = 0
+    for i, b in enumerate(body[:5]):
+        n |= (b & 0x7F) << (7 * i)
+        if not b & 0x80:
+            break
+    else:
+        raise AvroError("avro: truncated or over-long snappy length preamble")
+    # a 3-byte copy element yields at most 64 bytes, so a body cannot
+    # expand past 22x its size: refuse a larger claim before allocating it
+    if n > 0xFFFFFFFF or n > 22 * len(body):
+        raise AvroError(
+            f"avro: snappy preamble claims {n} bytes from a {len(body)}-byte body"
+        )
+    try:
+        out = pa.decompress(body, decompressed_size=n, codec="snappy", asbytes=True)
+    except (OSError, pa.ArrowException) as e:
+        raise AvroError(f"avro: corrupt snappy block ({e})")
+    if zlib.crc32(out) & 0xFFFFFFFF != crc:
+        raise AvroError("avro: snappy block CRC mismatch")
+    return out
 
 
 def _decode_blocks(blob, fields, codec, sync, pos) -> list[dict]:
-    import zlib
-
     rows: list[dict] = []
     while pos < len(blob):
         count, pos = _read_varint(blob, pos)
@@ -622,29 +647,13 @@ def _decode_blocks(blob, fields, codec, sync, pos) -> list[dict]:
 
             block = lzma.decompress(block)
         elif codec == "snappy":
-            # Avro snappy framing: raw-snappy body + 4-byte big-endian
-            # CRC32 of the UNCOMPRESSED data (Avro spec, file container
-            # codecs) — verify it, the whole point of carrying it
-            from graph_db_clustering_spark.functions import snappy as _sn
-
-            if len(block) < 4:
-                raise AvroError("avro: snappy block shorter than its CRC")
-            body, crc = block[:-4], int.from_bytes(block[-4:], "big")
-            try:
-                block = _sn.decompress(body)
-            except _sn.SnappyError as e:
-                raise AvroError(f"avro: corrupt snappy block ({e})")
-            if zlib.crc32(block) & 0xFFFFFFFF != crc:
-                raise AvroError("avro: snappy block CRC mismatch")
+            block = _snappy_decompress(block)
         elif codec == "zstandard":
-            # round 11: pure-Python RFC 8878 frame decoder
-            # (functions/zstd, libzstd-cross-checked); frames written
-            # by real encoders and by this repo both decode
-            from graph_db_clustering_spark.functions import zstd as _zstd
-
+            # a stream read handles frames without a content size,
+            # concatenated frames and skippable frames
             try:
-                block = _zstd.decompress(block)
-            except _zstd.ZstdError as e:
+                block = pa.CompressedInputStream(pa.BufferReader(block), "zstd").read()
+            except OSError as e:
                 raise AvroError(f"avro: corrupt zstandard block ({e})")
         bpos = 0
         for _ in range(count):
@@ -855,14 +864,10 @@ def encode_container(
 
         block = lzma.compress(block)
     elif codec == "snappy":
-        from graph_db_clustering_spark.functions import snappy as _sn
-
         crc = zlib.crc32(block) & 0xFFFFFFFF
-        block = _sn.compress(block) + crc.to_bytes(4, "big")
+        block = pa.compress(block, codec="snappy", asbytes=True) + crc.to_bytes(4, "big")
     elif codec == "zstandard":
-        from graph_db_clustering_spark.functions import zstd as _zstd
-
-        block = _zstd.compress(block)
+        block = pa.compress(block, codec="zstd", asbytes=True)
     elif codec != "null":
         raise NotImplementedError(f"avro codec {codec!r} not supported")
     meta = {

@@ -82,10 +82,3 @@ def read_cifar_batches(
         "batch",
     )
 
-
-def convert_to_parquet(spark: SparkSession, src_dir: str, out_dir: str) -> None:
-    """One-time conversion: pickle batches -> columnar parquet, partitioned
-    by batch file (the offline converter SURVEY §1.3 prescribes)."""
-    read_cifar_batches(spark, src_dir).write.mode("overwrite").partitionBy(
-        "batch"
-    ).parquet(out_dir)

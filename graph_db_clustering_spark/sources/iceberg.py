@@ -238,16 +238,6 @@ def _validate_transform(transform: str) -> None:
     )
 
 
-def _spec_fields(meta: dict) -> list[dict]:
-    """Partition-spec fields of the table's default (or only) spec."""
-    specs = meta.get("partition-specs") or []
-    if not specs:
-        return []
-    sid = meta.get("default-spec-id")
-    spec = next((s for s in specs if s.get("spec-id") == sid), specs[-1])
-    return spec.get("fields") or []
-
-
 def _metadata_file(path: str) -> str:
     mdir = os.path.join(path, "metadata")
     hint = os.path.join(mdir, "version-hint.text")

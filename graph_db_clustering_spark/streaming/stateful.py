@@ -306,112 +306,6 @@ def funnel_with_state(
     )
 
 
-ANOMALY_OUT_SCHEMA = (
-    "user_id bigint, event_id bigint, value double, zscore double"
-)
-
-
-def anomaly_zscore_batch(
-    events: DataFrame,
-    window: int = 20,
-    min_n: int = 10,
-    z_thresh: float = 3.0,
-) -> DataFrame:
-    """Batch form of trailing-window z-score anomaly detection (the
-    events_anomaly entry): flag events whose value is more than
-    z_thresh sample standard deviations from the mean of the same
-    user's previous `window` events; the frame excludes the current
-    row so a spike can't mask itself, and stays silent until min_n
-    trailing events exist. One user-partitioned window pass."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    tw = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-window, -1)
-    )
-    z = (F.col("value") - F.avg("value").over(tw)) / F.stddev_samp(
-        "value"
-    ).over(tw)
-    return (
-        events.select(
-            "user_id",
-            "event_id",
-            "value",
-            z.alias("zscore"),
-            F.count("value").over(tw).alias("__n"),
-            F.stddev_samp("value").over(tw).alias("__sd"),
-        )
-        .filter(
-            (F.col("__n") >= min_n)
-            & (F.col("__sd") > 0)
-            & (F.abs("zscore") > z_thresh)
-        )
-        .drop("__n", "__sd")
-    )
-
-
-def anomaly_zscore_stream(
-    events: DataFrame,
-    window: int = 20,
-    min_n: int = 10,
-    z_thresh: float = 3.0,
-) -> DataFrame:
-    """The same detector as a custom stateful streaming operator
-    (applyInPandasWithState): per user, the state is the trailing ring
-    of up to `window` values — bounded, keyed, checkpointed. Each
-    micro-batch sorts its rows by (ts, event_id), scores each event
-    against the ring BEFORE pushing its value (the batch frame's
-    20-PRECEDING..1-PRECEDING exclusion), and emits the outliers.
-
-    The sample statistics use the same two-pass mean/sum-of-squares
-    form as stddev_samp, so streaming z-scores equal the batch
-    window's (pinned replay==batch in tests, round-4 comparison)."""
-
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        ring: list[float] = list(state.get[0]) if state.exists else []
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ["ts", "event_id"]
-        )
-        out = []
-        for r in pdf.itertuples():
-            v = float(r.value)
-            n = len(ring)
-            if n >= min_n:
-                mu = sum(ring) / n
-                var = sum((x - mu) ** 2 for x in ring) / (n - 1)
-                if var > 0:
-                    z = (v - mu) / var**0.5
-                    if abs(z) > z_thresh:
-                        out.append((user_id, int(r.event_id), v, z))
-            ring.append(v)
-            if len(ring) > window:
-                ring = ring[-window:]
-        state.update((ring,))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "event_id", "value", "zscore"]
-            )
-
-    return (
-        events.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=ANOMALY_OUT_SCHEMA,
-            stateStructType="ring array<double>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 DECAY_OUT_SCHEMA = "event_type string, n_events bigint, decayed double, asof_us bigint"
 DECAY_STATE_SCHEMA = "cnt bigint, dec double, last_us bigint"
 

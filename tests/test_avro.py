@@ -29,7 +29,7 @@ ROWS = [
 ]
 
 
-@pytest.mark.parametrize("codec", ["null", "deflate", "snappy"])
+@pytest.mark.parametrize("codec", ["null", "deflate", "snappy", "zstandard"])
 def test_container_roundtrip_all_primitives(codec):
     blob = avro.encode_container(SCHEMA, ROWS, codec=codec)
     fields, rows = avro.decode_container(blob)
@@ -54,8 +54,7 @@ def test_gates():
     with pytest.raises(avro.AvroError, match="magic"):
         avro.decode_container(b"NOPE")
     with pytest.raises(avro.AvroError, match="zstandard"):
-        # round 11: zstandard DECODES now (functions/zstd); a deflate
-        # body relabeled zstandard is a corrupt frame, not a gate
+        # a deflate body relabeled zstandard is a corrupt frame, not a gate
         # (value length prefixes are zigzag varints: 7 -> 0x0e, 9 -> 0x12)
         avro.decode_container(
             avro.encode_container(
@@ -102,7 +101,7 @@ NESTED_ROWS = [
 ]
 
 
-@pytest.mark.parametrize("codec", ["null", "deflate", "snappy"])
+@pytest.mark.parametrize("codec", ["null", "deflate", "snappy", "zstandard"])
 def test_nested_container_roundtrip(codec):
     blob = avro.encode_container(NESTED_SCHEMA, NESTED_ROWS, codec=codec)
     fields, rows = avro.decode_container(blob)
@@ -434,9 +433,9 @@ def test_recursive_schema_unrolls_to_depth(spark, tmp_path):
 
 
 def test_bzip2_and_xz_codecs_roundtrip():
-    """Round 10: the spec's bzip2 and xz container codecs (stdlib
-    decoders) round-trip; round 11: zstandard round-trips too
-    (functions/zstd), and a relabeled non-frame block is corrupt."""
+    """The spec's bzip2 and xz container codecs (stdlib decoders)
+    round-trip; zstandard round-trips too, and a relabeled non-frame
+    block is corrupt."""
     from graph_db_clustering_spark.sources.avro import (
         decode_container,
         encode_container,
@@ -456,6 +455,84 @@ def test_bzip2_and_xz_codecs_roundtrip():
         # a zstd frame -> corrupt, loudly
         blob2 = bytes(blob).replace(b"\x08null", b"\x12zstandard")
         decode_container(blob2)
+
+
+def _single_block(blob):
+    """(header incl. sync, row count, block bytes, sync) of a
+    one-block container."""
+    _f, _codec, sync, pos = avro.read_header(blob)
+    count, p = avro._read_varint(blob, pos)
+    size, p = avro._read_varint(blob, p)
+    assert blob[p + size :] == sync
+    return blob[:pos], count, blob[p : p + size], sync
+
+
+def _with_block(header, count, block, sync):
+    return (header + avro._write_varint(count)
+            + avro._write_varint(len(block)) + block + sync)
+
+
+def test_zstandard_blocks_compress_and_decode_multi_frame():
+    """A compressible zstandard block is smaller than the null one, and
+    a block of two frames with a skippable frame between them decodes
+    (the spec allows any frame sequence)."""
+    import struct
+
+    import pyarrow as pa
+
+    schema = {"type": "record", "name": "r", "fields": [
+        {"name": "t", "type": "string"}]}
+    rows = [{"t": "repetitive payload " * 10} for _ in range(200)]
+    blob = avro.encode_container(schema, rows, codec="zstandard")
+    raw = avro.encode_container(schema, rows, codec="null")
+    assert len(blob) < 0.3 * len(raw)
+    assert avro.decode_container(blob)[1] == rows
+
+    _h, count, data, _s = _single_block(raw)
+    header, _c, _b, sync = _single_block(blob)
+    cut = len(data) // 3
+    skip = struct.pack("<II", 0x184D2A53, 5) + b"noise"
+    frames = (pa.compress(data[:cut], codec="zstd", asbytes=True) + skip
+              + pa.compress(data[cut:], codec="zstd", asbytes=True))
+    assert avro.decode_container(_with_block(header, count, frames, sync))[1] == rows
+
+
+def test_corrupt_snappy_blocks_raise_avro_error(monkeypatch):
+    """Every corrupt snappy block is an AvroError: a flipped body byte,
+    a truncated or over-long length preamble, a body pyarrow rejects,
+    and a preamble that claims more than the body can expand to —
+    refused before any buffer of that size is asked for."""
+    schema = {"type": "record", "name": "r", "fields": [
+        {"name": "id", "type": "long"}, {"name": "text", "type": "string"}]}
+    rows = [{"id": i, "text": "the quick brown fox " * 5} for i in range(50)]
+    header, count, block, sync = _single_block(
+        avro.encode_container(schema, rows, codec="snappy"))
+    body, crc = block[:-4], block[-4:]
+
+    def decode(body, crc=crc):
+        return avro.decode_container(_with_block(header, count, body + crc, sync))
+
+    assert decode(body)[1] == rows
+    flipped = bytearray(body)
+    flipped[-10] ^= 0xFF
+    cases = {
+        "CRC|corrupt": bytes(flipped),
+        "truncated or over-long": b"\x80\x80",
+        "over-long": b"\xff" * 5 + b"\x01abc",
+        "corrupt snappy": b"\x05\x00a\x0e\x09\x00",  # copy before start
+    }
+    for match, bad in cases.items():
+        with pytest.raises(avro.AvroError, match=match):
+            decode(bad)
+
+    def no_alloc(*a, **k):
+        raise AssertionError("oversized preamble reached the decompressor")
+
+    monkeypatch.setattr(avro.pa, "decompress", no_alloc)
+    with pytest.raises(avro.AvroError, match="claims 4294967295 bytes"):
+        decode(b"\xff\xff\xff\xff\x0f", crc=b"\0" * 4)  # 4 GiB from 5 bytes
+    with pytest.raises(avro.AvroError, match="claims"):
+        decode(bytes([111]) + b"\x00" * 4)  # 22 * 5 + 1
 
 
 def test_logical_types_roundtrip_and_spark_read(spark, tmp_path):

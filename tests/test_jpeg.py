@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import glob
 import math
+import os
 import struct
 
 import numpy as np
@@ -24,6 +25,10 @@ from graph_db_clustering_spark.functions import jpeg
 from graph_db_clustering_spark.functions.jpeg import ZIGZAG, _build_huffman, decode
 
 REF_DATA = "/root/reference/data"
+needs_ref_data = pytest.mark.skipif(
+    not os.path.isdir(REF_DATA),
+    reason=f"the reference's JPEGs are not present at {REF_DATA}",
+)
 
 # ITU T.81 Annex K.3 typical tables (public spec constants)
 DC_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
@@ -485,6 +490,7 @@ def _sof_dims(path: str) -> tuple[int, int]:
     raise AssertionError("no SOF0")
 
 
+@needs_ref_data
 def test_reference_images_decode_to_sof_dimensions():
     paths = sorted(glob.glob(f"{REF_DATA}/*.jpeg"))
     assert len(paths) == 20
@@ -499,6 +505,7 @@ def test_reference_images_decode_to_sof_dimensions():
         assert 20 < g.mean() < 235, p
 
 
+@needs_ref_data
 def test_reference_images_decode_deterministically():
     p = sorted(glob.glob(f"{REF_DATA}/*.jpeg"))[0]
     data = open(p, "rb").read()
@@ -506,6 +513,7 @@ def test_reference_images_decode_deterministically():
     assert (a == b).all()
 
 
+@needs_ref_data
 def test_image_features_end_to_end_over_reference_jpegs(spark):
     """VERDICT r2 missing #2: the reference's own 20 JPEGs through the
     distributed decode -> grayscale -> resize -> 7-stat pipeline."""

@@ -59,6 +59,28 @@ def test_purity_in_unit_interval(points):
         assert r.hi + r.lo > 0
 
 
+
+def test_fit_failing_mid_loop_releases_its_pins(points, spark, monkeypatch):
+    """An iteration that raises after the assignments were persisted
+    leaves no cached frame behind: a failed fit has no result to own it.
+    Local checkpoints (the per-iteration centroids) are lineage
+    truncation, not cached frames, and are not counted."""
+    points.count()  # the module fixture's own cache is not the fit's
+
+    def cached():
+        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+        return sum(not r.isCheckpointed() for r in rdds)
+
+    before = cached()
+
+    def boom(*a, **k):
+        raise RuntimeError("update failed")
+
+    monkeypatch.setattr(kmeans, "update", boom)
+    with pytest.raises(RuntimeError, match="update failed"):
+        kmeans.fit(points, k=2, max_iter=5)
+    assert cached() <= before
+
 def test_empty_cluster_keeps_previous_centroid(points, spark):
     cents = kmeans.init_centroids(points, "vec_id", "embedding", 2)
     a = kmeans.assign(points, cents)

@@ -77,6 +77,11 @@ def test_puffin_bad_magic_and_flags(tmp_path):
     open(p, "wb").write(bytes(raw))
     with pytest.raises(PuffinError, match="flags"):
         read_puffin(p)
+    # the LZ4 flag over a payload that is not an LZ4 frame
+    raw[-8] = 0x01
+    open(p, "wb").write(bytes(raw))
+    with pytest.raises(PuffinError, match="corrupt lz4"):
+        read_puffin(p)
 
 
 def test_puffin_lz4_compressed_footer_reads(tmp_path):
@@ -84,7 +89,7 @@ def test_puffin_lz4_compressed_footer_reads(tmp_path):
     valid compressed-footer file by hand and read it back."""
     import struct as _struct
 
-    from graph_db_clustering_spark.functions.lz4 import frame_compress
+    import pyarrow as pa
 
     p = str(tmp_path / "c.puffin")
     write_puffin(p, [{"type": "t", "data": b"payload"}])
@@ -92,7 +97,7 @@ def test_puffin_lz4_compressed_footer_reads(tmp_path):
     (size,) = _struct.unpack_from("<i", raw, len(raw) - 12)
     start = len(raw) - 12 - size
     payload = raw[start : start + size]
-    comp = frame_compress(payload)
+    comp = pa.compress(payload, codec="lz4", asbytes=True)
     rebuilt = (
         raw[: start - 4] + MAGIC + comp
         + _struct.pack("<i", len(comp)) + b"\x01\x00\x00\x00" + MAGIC
@@ -273,17 +278,16 @@ def test_iceberg_dv_multiple_data_files(spark, tmp_path):
 
 
 def test_puffin_blob_codecs(tmp_path):
-    """compression-codec lz4 and zstd blobs decode through the repo's
-    own frame codecs; unknown codecs gate loudly."""
-    from graph_db_clustering_spark.functions.lz4 import frame_compress
-    from graph_db_clustering_spark.functions.zstd import compress
+    """compression-codec lz4 and zstd blobs decode as single frames;
+    corrupt frames are a PuffinError; unknown codecs gate loudly."""
+    import pyarrow as pa
 
     body = b"blob payload " * 20
     p = str(tmp_path / "c.puffin")
     write_puffin(p, [
-        {"type": "l", "data": frame_compress(body),
+        {"type": "l", "data": pa.compress(body, codec="lz4", asbytes=True),
          "properties": {"compression-codec": "lz4"}},
-        {"type": "z", "data": compress(body),
+        {"type": "z", "data": pa.compress(body, codec="zstd", asbytes=True),
          "properties": {"compression-codec": "zstd"}},
         {"type": "r", "data": body},
     ])
@@ -296,6 +300,12 @@ def test_puffin_blob_codecs(tmp_path):
         if codec:
             entry["compression-codec"] = codec
         assert puffin_blob(raw, entry) == body
+        if codec:
+            # a truncated frame and a plain blob relabeled as a frame
+            for bad in (dict(entry, length=entry["length"] // 2),
+                        dict(footer["blobs"][2], **{"compression-codec": codec})):
+                with pytest.raises(PuffinError, match=f"corrupt {codec}"):
+                    puffin_blob(raw, bad)
     entry = dict(footer["blobs"][2])
     entry["compression-codec"] = "snappy"
     with pytest.raises(NotImplementedError, match="compression-codec"):
