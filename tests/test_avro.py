@@ -472,31 +472,6 @@ def _with_block(header, count, block, sync):
             + avro._write_varint(len(block)) + block + sync)
 
 
-def test_zstandard_blocks_compress_and_decode_multi_frame():
-    """A compressible zstandard block is smaller than the null one, and
-    a block of two frames with a skippable frame between them decodes
-    (the spec allows any frame sequence)."""
-    import struct
-
-    import pyarrow as pa
-
-    schema = {"type": "record", "name": "r", "fields": [
-        {"name": "t", "type": "string"}]}
-    rows = [{"t": "repetitive payload " * 10} for _ in range(200)]
-    blob = avro.encode_container(schema, rows, codec="zstandard")
-    raw = avro.encode_container(schema, rows, codec="null")
-    assert len(blob) < 0.3 * len(raw)
-    assert avro.decode_container(blob)[1] == rows
-
-    _h, count, data, _s = _single_block(raw)
-    header, _c, _b, sync = _single_block(blob)
-    cut = len(data) // 3
-    skip = struct.pack("<II", 0x184D2A53, 5) + b"noise"
-    frames = (pa.compress(data[:cut], codec="zstd", asbytes=True) + skip
-              + pa.compress(data[cut:], codec="zstd", asbytes=True))
-    assert avro.decode_container(_with_block(header, count, frames, sync))[1] == rows
-
-
 def test_corrupt_snappy_blocks_raise_avro_error(monkeypatch):
     """Every corrupt snappy block is an AvroError: a flipped body byte,
     a truncated or over-long length preamble, a body pyarrow rejects,

@@ -1,83 +1,32 @@
-"""LZ4 block + frame codec (functions/lz4.py) — every case
-cross-checked through pyarrow's bundled liblz4 in BOTH directions."""
+"""LZ4 frames in Puffin files (functions/puffin): corrupt frames from
+outside input raise PuffinError, whatever part of the frame is bad."""
 
 from __future__ import annotations
 
-import random
-
+import pyarrow as pa
 import pytest
 
-from graph_db_clustering_spark.functions import lz4
+from graph_db_clustering_spark.functions.puffin import PuffinError, puffin_blob
 
 
-def _cases():
-    rnd = random.Random(5)
-    return [
-        b"",
-        b"a",
-        b"hello hello hello hello hello!",
-        b"abcd" * 5000,
-        bytes(rnd.randrange(256) for _ in range(10000)),
-        open(
-            "graph_db_clustering_spark/functions/zstd.py", "rb"
-        ).read(),
-        bytes(rnd.randrange(4) for _ in range(300_000)),  # multi-block
-    ]
-
-
-def test_block_both_directions():
-    import pyarrow as pa
-
-    raw = pa.Codec("lz4_raw")
-    for p in _cases():
-        enc = lz4.block_compress(p)
-        assert bytes(raw.decompress(enc, len(p))) == p
-        assert lz4.block_decompress(enc) == p
-        assert lz4.block_decompress(bytes(raw.compress(p))) == p
-
-
-def test_frame_both_directions():
-    import pyarrow as pa
-
-    frm = pa.Codec("lz4_frame")
-    for p in _cases():
-        enc = lz4.frame_compress(p)
-        assert bytes(frm.decompress(enc, len(p))) == p
-        assert lz4.frame_decompress(enc) == p
-        # liblz4 writes block-LINKED frames: matches cross blocks
-        assert lz4.frame_decompress(bytes(frm.compress(p))) == p
-
-
-def test_frame_actually_compresses():
-    src = open("graph_db_clustering_spark/cypher.py", "rb").read()
-    enc = lz4.frame_compress(src)
-    assert len(enc) < 0.55 * len(src)
-
-
-def test_xxh32_vectors():
-    assert lz4.xxh32(b"") == 0x02CC5D05
-    assert lz4.xxh32(b"Nobody inspects the spammish repetition") \
-        == 0xE2293B2F
-    assert lz4.xxh32(b"Nobody inspects the spammish repetition",
-                     seed=42) != lz4.xxh32(
-        b"Nobody inspects the spammish repetition")
+def _decode(frame: bytes) -> bytes:
+    return puffin_blob(frame, {"offset": 0, "length": len(frame),
+                               "compression-codec": "lz4"})
 
 
 def test_frame_guards():
     p = b"payload " * 10
-    enc = bytearray(lz4.frame_compress(p))
-    with pytest.raises(lz4.Lz4Error, match="magic"):
-        lz4.frame_decompress(b"\x00" * 16)
-    # flip a content byte: content checksum catches it
-    enc2 = bytearray(enc)
-    enc2[15] ^= 0xFF
-    with pytest.raises(lz4.Lz4Error):
-        lz4.frame_decompress(bytes(enc2))
-    # header checksum byte
-    enc3 = bytearray(enc)
-    enc3[14] ^= 0xFF  # HC byte for FLG|BD|size8 header
-    with pytest.raises(lz4.Lz4Error, match="header checksum|bad|match"):
-        lz4.frame_decompress(bytes(enc3))
-    # corrupt offset inside a block must not crash into negative space
-    with pytest.raises(lz4.Lz4Error, match="offset"):
-        lz4.block_decompress(b"\x10a\xff\xff")
+    enc = pa.compress(p, codec="lz4", asbytes=True)
+    assert _decode(enc) == p
+    # frame = magic(4) FLG BD HC, then blocks of size(4) + data
+    bad = {
+        "frameType_unknown": b"\x00" * 16,
+        "headerChecksum": enc[:6] + bytes([enc[6] ^ 0xFF]) + enc[7:],
+        "Truncated": enc[: len(enc) // 2],
+        # a block whose match offset points before the output start
+        "decompressionFailed": (enc[:7] + (4).to_bytes(4, "little")
+                                + b"\x10a\xff\xff" + b"\0\0\0\0"),
+    }
+    for why, frame in bad.items():
+        with pytest.raises(PuffinError, match=f"corrupt lz4.*{why}"):
+            _decode(frame)

@@ -1,44 +1,37 @@
-"""functions/zstd (RFC 8878 decoder): libzstd cross-checks via
-pyarrow's bundled encoder — a genuinely independent implementation —
-plus xxhash64 vectors, own-encoder interop both directions, and the
-loud gates."""
+"""Avro zstandard blocks (sources/avro): the reader decodes any frame
+sequence libzstd writes, at any level, with skippable frames between
+frames; corrupt frames raise AvroError; the writer's blocks compress."""
 
 from __future__ import annotations
 
 import struct
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
-from graph_db_clustering_spark.functions import zstd
+from graph_db_clustering_spark.sources import avro as A
+
+BYTES_SCHEMA = {"type": "record", "name": "r",
+                "fields": [{"name": "b", "type": "bytes"}]}
 
 
-def _codec(level=3):
-    import pyarrow as pa
-
-    return pa.Codec("zstd", compression_level=level)
+def _frame(data: bytes, level: int = 3) -> bytes:
+    return pa.Codec("zstd", compression_level=level).compress(data, asbytes=True)
 
 
-def test_xxh64_published_vectors():
-    assert zstd.xxh64(b"") == 0xEF46DB3751D8E999
-    assert zstd.xxh64(b"a") == 0xD24EC4F1A98C6E5B
-    assert zstd.xxh64(b"abc") == 0x44BC2CF5AD770999
-
-
-def test_predefined_distributions_sum():
-    for dist, al in (
-        (zstd._LL_DEFAULT, zstd._LL_DEFAULT_AL),
-        (zstd._ML_DEFAULT, zstd._ML_DEFAULT_AL),
-        (zstd._OF_DEFAULT, zstd._OF_DEFAULT_AL),
-    ):
-        assert sum(max(c, 1) for c in dist) == 1 << al
-    # extra-bit baselines accumulate correctly (spot values from RFC)
-    assert zstd._LL_BASE[16] == (16, 1)
-    assert zstd._LL_BASE[25] == (64, 6)
-    assert zstd._LL_BASE[35] == (65536, 16)
-    assert zstd._ML_BASE[0] == (3, 0)
-    assert zstd._ML_BASE[32] == (35, 1)
-    assert zstd._ML_BASE[52] == (65539, 16)
+def _with_block(schema, rows, make_block) -> bytes:
+    """A one-block zstandard container of `rows` whose block is
+    `make_block(uncompressed block bytes)`."""
+    nul = A.encode_container(schema, rows, codec="null")
+    _f, _codec, _sync, pos = A.read_header(nul)
+    count, p = A._read_varint(nul, pos)
+    size, p = A._read_varint(nul, p)
+    block = make_block(nul[p : p + size])
+    blob = A.encode_container(schema, rows, codec="zstandard")
+    hdr_end = A.read_header(blob)[3]
+    return (blob[:hdr_end] + A._write_varint(count)
+            + A._write_varint(len(block)) + block + blob[-16:])
 
 
 def _payloads():
@@ -53,10 +46,10 @@ def _payloads():
     words = [b"alpha", b"beta", b"gamma", b"delta", b"longer-word-x"]
     yield b" ".join(random.choice(words) for _ in range(20_000))  # seqs
     yield bytes(rng.integers(0, 3, 80_000, dtype=np.uint8))  # huffman
-    with open("/root/repo/SURVEY.md", "rb") as f:
+    with open(A.__file__, "rb") as f:
         txt = f.read()
     yield txt
-    yield txt * 4  # multi-block (>128k), treeless + repeat modes
+    yield txt * 4  # multi-block (>128k)
     for sz in (17, 255, 256, 4096, 131_073):
         yield bytes(rng.integers(0, 64, sz, dtype=np.uint8))
     block = bytes(rng.integers(0, 256, 3_000, dtype=np.uint8))
@@ -65,64 +58,48 @@ def _payloads():
 
 @pytest.mark.parametrize("level", [1, 3, 9, 19])
 def test_libzstd_cross_check(level):
-    """Every payload shape through the REAL libzstd encoder at this
-    level must decode byte-identically — this is the cross-check that
-    validates the predefined FSE tables, the Huffman layout, and the
-    sequence machinery against an independent implementation."""
-    c = _codec(level)
+    """Every payload shape, compressed by libzstd at this level, reads
+    back byte-identically from a zstandard block."""
     for p in _payloads():
-        assert zstd.decompress(bytes(c.compress(p))) == p
-
-
-def test_own_encoder_both_directions():
-    rng = np.random.default_rng(1)
-    for p in (b"", b"q", b"zz" * 9000,
-              bytes(rng.integers(0, 256, 300_000, dtype=np.uint8))):
-        enc = zstd.compress(p)
-        assert zstd.decompress(enc) == p
-        # and the independent implementation reads our frames
-        assert bytes(_codec().decompress(enc, len(p))) == p
-
-
-def test_checksum_detects_corruption():
-    p = b"payload " * 1000
-    enc = bytearray(zstd.compress(p, checksum=True))
-    assert zstd.decompress(bytes(enc)) == p
-    # flip one payload byte: the xxhash64 content checksum must catch it
-    enc[30] ^= 0x01
-    with pytest.raises(zstd.ZstdError, match="checksum|exhausted|overrun"):
-        zstd.decompress(bytes(enc))
+        rows = [{"b": p}]
+        blob = _with_block(BYTES_SCHEMA, rows, lambda raw: _frame(raw, level))
+        assert A.decode_container(blob)[1] == rows
 
 
 def test_skippable_frames_and_concatenation():
-    a = zstd.compress(b"first-")
+    rows = [{"b": b"first-second"}]
     skip = struct.pack("<I", 0x184D2A53) + struct.pack("<I", 5) + b"noise"
-    b = zstd.compress(b"second")
-    assert zstd.decompress(a + skip + b) == b"first-second"
+
+    def two_frames(raw):
+        cut = len(raw) // 3
+        return _frame(raw[:cut]) + skip + _frame(raw[cut:])
+
+    blob = _with_block(BYTES_SCHEMA, rows, two_frames)
+    assert A.decode_container(blob)[1] == rows
 
 
 def test_gates_and_corrupt_inputs():
-    with pytest.raises(zstd.ZstdError, match="magic"):
-        zstd.decompress(b"\x00\x01\x02\x03\x04\x05")
-    with pytest.raises(zstd.ZstdError):
-        zstd.decompress(b"\x28")  # shorter than a magic
-    # dictionary frames gate loudly: frame header with dict-ID flag
-    hdr = struct.pack("<I", zstd.MAGIC) + bytes([0x21, 0x00, 0x05])
-    with pytest.raises(NotImplementedError, match="dictionary"):
-        zstd.decompress(hdr)
-    # truncated compressed frame
-    c = _codec()
-    enc = bytes(c.compress(b"hello world, here is some compressible text" * 40))
-    with pytest.raises(zstd.ZstdError):
-        zstd.decompress(enc[: len(enc) // 2])
+    rows = [{"b": b"hello world, here is some compressible text" * 40}]
+
+    def truncated(raw):
+        frame = _frame(raw)
+        return frame[: len(frame) // 2]
+
+    for make_block in (
+        lambda _raw: b"\x00\x01\x02\x03\x04\x05",  # bad magic
+        lambda _raw: b"\x28",  # shorter than a magic
+        # a frame header with the dictionary-ID flag and nothing after
+        lambda _raw: struct.pack("<I", 0xFD2FB528) + bytes([0x21, 0x00, 0x05]),
+        truncated,
+    ):
+        blob = _with_block(BYTES_SCHEMA, rows, make_block)
+        with pytest.raises(A.AvroError, match="corrupt zstandard"):
+            A.decode_container(blob)
 
 
 def test_avro_zstandard_container():
-    """The sources/avro gate is gone: zstandard containers round-trip
-    through the repo's own writer AND decode when the block is a REAL
-    libzstd frame."""
-    from graph_db_clustering_spark.sources import avro as A
-
+    """zstandard containers round-trip through the repo's own writer
+    AND decode when the block is a libzstd frame written elsewhere."""
     schema = {"type": "record", "name": "r", "fields": [
         {"name": "k", "type": "long"},
         {"name": "s", "type": ["null", "string"]},
@@ -134,81 +111,8 @@ def test_avro_zstandard_container():
     blob = A.encode_container(schema, rows, codec="zstandard")
     _fields, got = A.decode_container(blob)
     assert got == rows
-    # rebuild the same container with the block recompressed by libzstd
-    nul = A.encode_container(schema, rows, codec="null")
-    _f, codec, sync, pos = A.read_header(nul)
-    count, p2 = A._read_varint(nul, pos)
-    size, p3 = A._read_varint(nul, p2)
-    raw_block = nul[p3 : p3 + size]
-    assert nul[p3 + size : p3 + size + 16] == sync
-    real = bytes(_codec().compress(raw_block))
-    # splice: header with zstandard codec + the libzstd block
-    hdr_end_z = A.read_header(blob)[3]
-    rebuilt = (
-        blob[: hdr_end_z - 16] + sync
-        + A._write_varint(count) + A._write_varint(len(real))
-        + real + sync
-    )
-    _f2, got2 = A.decode_container(bytes(rebuilt))
+    _f2, got2 = A.decode_container(_with_block(schema, rows, _frame))
     assert got2 == rows
-
-
-# ---- round 11 continuation: the REAL encoder ---------------------------
-
-
-def _libzstd_decode(enc: bytes, n: int) -> bytes:
-    import pyarrow as pa
-
-    return bytes(pa.Codec("zstd").decompress(enc, n))
-
-
-def test_compressor_roundtrip_and_libzstd_crosscheck():
-    import random
-
-    rnd = random.Random(11)
-    cases = [
-        b"",
-        b"a",
-        b"hello world " * 4,
-        b"abcd" * 5000,
-        bytes(rnd.randrange(256) for _ in range(10000)),
-        (b"the quick brown fox jumps over the lazy dog. " * 700),
-        bytes(rnd.randrange(4) for _ in range(200_000)),  # multi-block
-    ]
-    for payload in cases:
-        enc = zstd.compress(payload)
-        assert zstd.decompress(enc) == payload
-        assert _libzstd_decode(enc, len(payload)) == payload
-
-
-def test_compressor_actually_compresses_text():
-    src = open(
-        "graph_db_clustering_spark/functions/zstd.py", "rb"
-    ).read()
-    enc = zstd.compress(src)
-    assert len(enc) < 0.6 * len(src)  # real LZ+FSE, not a store
-    assert zstd.decompress(enc) == src
-    assert _libzstd_decode(enc, len(src)) == src
-
-
-def test_compressor_raw_fallback_on_incompressible():
-    import random
-
-    rnd = random.Random(3)
-    payload = bytes(rnd.randrange(256) for _ in range(50_000))
-    enc = zstd.compress(payload)
-    # raw blocks + headers: tiny constant overhead, never blow-up
-    assert len(enc) <= len(payload) + 64
-    assert _libzstd_decode(enc, len(payload)) == payload
-
-
-def test_compressor_store_mode_still_valid():
-    payload = b"xyz" * 1000
-    enc = zstd.compress(payload, store=True)
-    assert zstd.decompress(enc) == payload
-    assert _libzstd_decode(enc, len(payload)) == payload
-    # store mode writes no compressed blocks: strictly larger
-    assert len(enc) >= len(payload)
 
 
 def test_avro_zstandard_blocks_now_compress(tmp_path):
