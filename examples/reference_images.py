@@ -43,7 +43,8 @@ def main(image_dir: str = "/root/reference/data", k: int = 2):
         ).alias("meta"),
     )
     feats = multimodal.image_features(images, resize_to=(32, 32))
-    named = feats.join(images.select(F.col("image_id").alias("id"), "name"), "id")
+    # cached: every Lloyd's iteration reads its input once
+    named = feats.join(images.select(F.col("image_id").alias("id"), "name"), "id").cache()
     fit = kmeans.fit(named, k=k, id_col="id", vec_col="features", max_iter=10)
     assigned = kmeans.assign(named, fit.centroids, "id", "features").join(
         named.select("id", "name"), "id"

@@ -10,8 +10,8 @@ engine — same workflow, each step now one distributed plan:
                                              (Arrow-batched mapInPandas)
     fe.insertImageGraph() (1 tx per image)   one batched vertex write
     fe.initCentroids(k)  (Cypher rand())     seed-deterministic sample
-    fe.train()           (driver O(N*k))     kmeans.fit — broadcast argmin
-                                             assignment + distributed update
+    fe.train()           (driver O(N*k))     kmeans.fit — one assign + vector-sum
+                                             aggregate job per iteration
     fe.scoreClusters()                       purity_scores (+ true silhouette
                                              via MLlib if wanted)
 
@@ -55,8 +55,11 @@ def train(sf_dir: str = "/root/testdata/sf0.001", k: int = 2, store_path: str | 
     store.save(graph)  # batched columnar write — never per-row transactions
 
     # -- init + Lloyd's loop (initCentroids + train, :223-240, 557-598) ----
+    # checkpointed: the fit's assignments are lazy over its input, and the
+    # CLOSEST_TO save below overwrites the stored vertices it would re-read
+    images = store.load().vertices.filter(F.col("label") == "Image").localCheckpoint()
     result = kmeans.fit(
-        store.load().vertices.filter(F.col("label") == "Image"),
+        images,
         k=k,
         id_col="id",
         vec_col="features",

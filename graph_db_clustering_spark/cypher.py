@@ -4305,8 +4305,7 @@ class CypherSession:
             # truncate lineage: without this, an iterative driver loop —
             # the reference's train() — stacks every past mutation's
             # joins/unions into one ever-deeper plan and each iteration
-            # re-executes all previous ones (same fix as kmeans.fit's
-            # per-iteration localCheckpoint).
+            # re-executes all previous ones.
             g = Graph(
                 g.vertices.localCheckpoint(eager=True),
                 g.edges.localCheckpoint(eager=True),

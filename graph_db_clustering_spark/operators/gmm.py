@@ -122,8 +122,7 @@ def gmm_fit(
     # re-scan and re-decode the source (6+ scans at max_iter=5). The pin
     # is spillable (MEMORY_AND_DISK is the DataFrame default), holds only
     # the two columns EM reads, and is RELEASED before returning, so
-    # repeated bench invocations still recompute from parquet (guide §5;
-    # same shape as kmeans.fit's points cache).
+    # repeated bench invocations still recompute from parquet (guide §5).
     df = df.select(id_col, vec_col).persist()
     try:
         return _gmm_fit_pinned(df, vec_col, k, id_col, max_iter, tol, var_floor)

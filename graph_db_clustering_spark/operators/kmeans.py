@@ -4,16 +4,18 @@ The reference's training loop (kmeans_clustering/image_classification.py:
 557-598) collects every point to the driver, runs an O(N*k) nested Python
 loop per iteration (:417-433), writes one edge per point per iteration over
 Bolt (:444-445), and recomputes centroids with per-property Cypher round
-trips (:471-503). Here each iteration is ONE distributed plan:
+trips (:471-503). Here the k centroids stay on the driver and each
+iteration is ONE aggregate job over the points (`_lloyd_step`):
 
-    assignment: points.crossJoin(broadcast(centroids))
-                -> cosine/euclidean expression (codegen, functions/vectors)
-                -> min(struct) argmin (map-side partial combine)
-    update:     assigned.groupBy(cid).agg(elementwise avg of vectors)
-                -> k rows back to the driver (the only driver traffic)
+    assignment: one per-row expression over the centroids as an
+                array<array<double>> literal (no join, no groupBy(id));
+                array_min over (sort_key, cid, score) picks the best
+    update:     groupBy(cid) -> count + element-wise vector sums
+                -> k rows back to the driver, which forms the means
 
 Driver traffic is O(k * dim) per iteration regardless of N — the property
-the reference lacks entirely (SURVEY §4.1 anti-patterns).
+the reference lacks entirely (SURVEY §4.1 anti-patterns). `assign` and
+`update` are the same two steps over lazy centroid DataFrames.
 
 Semantics notes (SURVEY §7.4):
 - argmax-cosine, i.e. the CORRECTED assignment; the reference assigns each
@@ -29,13 +31,14 @@ Semantics notes (SURVEY §7.4):
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from graph_db_clustering_spark.functions.vectors import cosine_similarity, dot, unit
-from graph_db_clustering_spark.operators import pins
+from graph_db_clustering_spark.functions.vectors import cosine_similarity, dot
 
 KNUTH = 2654435761
 MOD = 4294967296
@@ -88,10 +91,6 @@ def assign(
         maximize = parity == "corrected"
     elif metric == "dot":
         # inner product — the cheap pair metric for PRE-NORMALIZED inputs
-        # (fit() normalizes points once and centroids per iteration; doing
-        # it here instead would re-evaluate unit() per PAIR, because
-        # Catalyst collapses the projection into the join — measured 2.7x
-        # SLOWER than the plain cosine form at 200k x 8 x 64)
         score = dot(F.col("vec"), F.col("centroid"))
         maximize = parity == "corrected"
     elif metric == "euclidean":
@@ -159,13 +158,6 @@ def update(
     )
 
 
-def sse(points: DataFrame, centroids: DataFrame, id_col: str, vec_col: str) -> float:
-    """Within-cluster sum of squared euclidean distances (property-test
-    metric: non-increasing across Lloyd's iterations)."""
-    a = assign(points, centroids, id_col, vec_col, metric="euclidean")
-    return a.agg(F.sum("score").alias("sse")).first().sse
-
-
 @dataclass
 class KMeansResult:
     centroids: DataFrame  # (cid, centroid)
@@ -173,6 +165,87 @@ class KMeansResult:
     iterations: int
     converged: bool
     history: list[dict] = field(default_factory=list)
+
+
+def _sql(x) -> str:
+    """A double, or a (nested) list of them, as an exact SQL literal:
+    repr() round-trips, so the JVM parses back the driver's bits."""
+    if isinstance(x, list):
+        return "array(" + ", ".join(map(_sql, x)) + ")"
+    if math.isfinite(x):
+        return repr(float(x)) + "D"
+    return f"CAST('{x!r}' AS DOUBLE)"
+
+
+def _sum_squares(c: list[float]) -> float:
+    # a left fold from 0.0 in the order of functions/vectors' JVM
+    # aggregate, so driver-side norms are bit-identical to unit()/dot()
+    return reduce(lambda acc, x: acc + x * x, c, 0.0)
+
+
+def _let(name: str, value: str, body: str) -> str:
+    """Evaluate `value` once per row and bind it as `name` in `body`."""
+    return f"transform(array({value}), {name} -> {body})[0]"
+
+
+def _best_centroid(centroids: list, metric: str, parity: str) -> Column:
+    """struct(sk, cid, score): the best of the driver-held centroids for
+    the row's `vec`, as one per-row expression — no join, no groupBy(id).
+
+    The k x dim matrix is ONE array literal, so the expression's size does
+    not grow with k * dim and its generated code is the same in every
+    iteration. Scores are assign()'s arithmetic: cosine is dot(unit(vec),
+    unit(centroid)) with the centroids normalized here on the driver;
+    euclidean is |v|^2 - 2 v.c + |c|^2. array_min over (sk, cid, score)
+    is assign()'s min(struct) order: best score, then lowest cid."""
+    dot = "aggregate(zip_with({}, {}, (x, y) -> double(x) * double(y)), 0D, (s, x) -> s + x)"
+    if metric == "cosine":
+        centroids = [[x / math.sqrt(_sum_squares(c)) for x in c] for c in centroids]
+        score = dot.format("u", "c")
+    elif metric == "dot":
+        score = dot.format("vec", "c")
+    elif metric == "euclidean":
+        cc = _sql([_sum_squares(c) for c in centroids])
+        score = f"vv - {dot.format('vec', 'c')} * 2 + CAST({cc} AS array<double>)[i]"
+    else:
+        raise ValueError(f"unknown metric: {metric}")
+    maximize = (parity == "corrected") != (metric == "euclidean")
+    best = (
+        f"array_min(transform(transform(CAST({_sql(centroids)} AS array<array<double>>),"
+        f" (c, i) -> {score}),"
+        f" (s, i) -> named_struct('sk', {'-s' if maximize else 's'}, 'cid', i, 'score', s)))"
+    )
+    if metric == "cosine":
+        norm = "sqrt(aggregate(vec, 0D, (s, x) -> s + double(x) * double(x)))"
+        best = _let("n", norm, _let("u", "transform(vec, x -> double(x) / n)", best))
+    elif metric == "euclidean":
+        best = _let("vv", dot.format("vec", "vec"), best)
+    return F.expr(best)
+
+
+def _centroid_frame(spark, centroids: list) -> DataFrame:
+    """(cid, centroid) of driver-held centroids, as a JVM-side literal."""
+    return spark.sql(
+        f"SELECT posexplode(CAST({_sql(centroids)} AS array<array<double>>)) AS (cid, centroid)"
+    )
+
+
+def _lloyd_step(vecs: DataFrame, centroids: list, metric: str, parity: str) -> dict:
+    """One pass over `vecs` (a `vec` column): assign each row to its
+    nearest driver-held centroid and aggregate per cluster. Returns
+    {cid: (rows, non-null vectors, element-wise vector sum)} — k rows, one
+    hash aggregate, so one map stage plus the result. A NULL vector counts
+    toward its cluster's size but not toward its sum."""
+    dim = len(centroids[0]) if centroids else 0
+    sums = [F.sum(F.col("vec")[j].cast("double")) for j in range(dim)]
+    best = _best_centroid(centroids, metric, parity)
+    rows = (
+        vecs.select(best.cid.alias("cid"), "vec")
+        .groupBy("cid")
+        .agg(F.count("*"), F.count("vec"), *sums)
+        .collect()
+    )
+    return {r[0]: (r[1], r[2], list(r[3:])) for r in rows}
 
 
 def fit(
@@ -186,89 +259,43 @@ def fit(
 ) -> KMeansResult:
     """Full Lloyd's loop (train() analog, image_classification.py:557-598).
 
-    Convergence: per-cluster assignment counts stable between iterations —
-    the reference's criterion (:589-592) — checked on k-row collected
-    dicts (driver traffic O(k)). Points are cached for the duration of
-    the fit and RELEASED before returning (r15 — the `pts` cache used to
-    leak, and a repeat invocation builds the identical plan, so Spark's
-    CacheManager served repeat runs of every kmeans-backed entry from the
-    first run's cache: the same cross-run measurement artifact class the
-    r14 minhash/global_cumsum fix removed). Centroids are
-    localCheckpoint()ed per iteration to truncate lineage (the loop would
-    otherwise build an O(iterations)-deep plan).
+    The k centroids live on the driver: each iteration is one
+    `_lloyd_step` aggregate job, and the new centroids are the means of
+    the non-null member vectors. Convergence: per-cluster assignment
+    counts stable between iterations — the reference's criterion
+    (:589-592). Nothing is persisted: each iteration reads `points` once,
+    so cache an expensive input plan before the call. The result is lazy:
+    `assignments` is the per-row expression over `points`, against the
+    centroids of the last iteration that ran, so it re-reads the input —
+    checkpoint `points` first if its files are overwritten while the
+    result is in use.
     """
-    pts = points.select(id_col, vec_col).cache()
-    assign_pts = pts
-    assignments = None
-    prev_assignments = None
-    try:
-        centroids = init_centroids(pts, id_col, vec_col, k).localCheckpoint(eager=False)
-        # cosine fast path: normalize points ONCE (cached) and the k centroids
-        # per iteration; the N*k pair loop is then a single dot() instead of
-        # dot + two norms. argmax dot(unit_p, unit_c) == argmax cosine(p, c),
-        # and the returned score IS the cosine, so semantics are unchanged.
-        assign_metric = metric
-        if metric == "cosine":
-            assign_metric = "dot"
-            assign_pts = pts.select(id_col, unit(F.col(vec_col)).alias(vec_col)).cache()
-        prev_counts: dict | None = None
-        history: list[dict] = []
-        converged = False
-        it = 0
-        for it in range(1, max_iter + 1):
-            # persisted: each iteration reads assignments twice (convergence
-            # counts + the update join) — without this the crossJoin+argmin
-            # recomputes per consumer, doubling every iteration's heavy work.
-            # The previous iteration's pin is released deterministically
-            # below; the FINAL pin outlives the call (the returned result is
-            # lazy) and is registered in the shared bounded-accretion
-            # registry, so the next fit — or the between-queries sweep —
-            # releases it (r15; it previously survived with no owner).
-            # Cross-run CacheManager serving is impossible here even while
-            # the pin lives: the plan contains the per-invocation
-            # localCheckpoint'd centroids (a unique ExistingRDD), so no two
-            # invocations ever build matching plans.
-            cents_it = (
-                centroids.select("cid", unit(F.col("centroid")).alias("centroid"))
-                if metric == "cosine"
-                else centroids
-            )
-            assignments = assign(
-                assign_pts, cents_it, id_col, vec_col, assign_metric, parity
-            ).persist()
-            counts = {
-                r.cid: r.n
-                for r in assignments.groupBy("cid").agg(F.count("*").alias("n")).collect()
-            }
-            history.append({"iteration": it, "counts": counts})
-            if counts == prev_counts:
-                converged = True
-                break
-            prev_counts = counts
-            # lazy (r14): the next iteration's assignment-counts job is the
-            # first reader and materializes the k-row checkpoint — one Spark
-            # job per Lloyd's iteration instead of two
-            centroids = update(pts, assignments, centroids, id_col, vec_col).localCheckpoint(
-                eager=False
-            )
-            if prev_assignments is not None:
-                prev_assignments.unpersist()
-            prev_assignments = assignments
-        if prev_assignments is not None and prev_assignments is not assignments:
-            prev_assignments.unpersist()
-        if assignments is not None:
-            pins.adopt("kmeans_assignments", assignments)
-        return KMeansResult(centroids, assignments, it, converged, history)
-    except BaseException:
-        # a failed iteration leaves no result to own the pins
-        for a in (assignments, prev_assignments):
-            if a is not None:
-                a.unpersist()
-        raise
-    finally:
-        if assign_pts is not pts:
-            assign_pts.unpersist()
-        pts.unpersist()
+    pts = points.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    init = init_centroids(pts.where(F.col("vec").isNotNull()), "id", "vec", k)
+    centroids = [r.centroid for r in sorted(init.collect())]
+    prev_counts: dict | None = None
+    history: list[dict] = []
+    converged = False
+    it = 0
+    assigned_to = centroids
+    for it in range(1, max_iter + 1):
+        assigned_to = centroids
+        stats = _lloyd_step(pts, centroids, metric, parity)
+        counts = {cid: n for cid, (n, _, _) in stats.items()}
+        history.append({"iteration": it, "counts": counts})
+        if counts == prev_counts:
+            converged = True
+            break
+        prev_counts = counts
+        centroids = list(centroids)
+        for cid, (_, n_vec, sums) in stats.items():
+            if n_vec:  # a cluster with no non-null member keeps its centroid
+                centroids[cid] = [s / n_vec for s in sums]
+    best = _best_centroid(assigned_to, metric, parity)
+    assignments = pts.select("id", best.alias("m")).select("id", "m.cid", "m.score")
+    return KMeansResult(
+        _centroid_frame(points.sparkSession, centroids), assignments, it, converged, history
+    )
 
 
 def purity_scores(
@@ -391,8 +418,8 @@ def init_centroids_parallel(
     set is a pure function of the data — partitioning-invariant and
     reproducible (test-pinned). The candidate set (~rounds*oversample
     rows) and the weight aggregation are the only driver traffic; the
-    corpus is scanned once per round with the candidate set BROADCAST
-    (it is centroid-sized), never shuffled.
+    corpus is scanned once per round with the candidate set as a literal
+    in a per-row expression (it is centroid-sized), never shuffled.
 
     The final reduction picks the max-weight candidate, then greedily
     adds the candidate maximizing weight * d^2 to the chosen set —
@@ -409,23 +436,13 @@ def init_centroids_parallel(
         raise ValueError("init_centroids_parallel: empty input")
     cands = [[float(x) for x in first[0][vec_col]]]
 
-    def cand_frame():
-        return spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cands)],
-            "cid int, centroid array<double>",
-        )
-
     for r in range(rounds):
-        # d^2 to the nearest current candidate: the assign() machinery
-        # (crossJoin(broadcast) + min-struct argmin; euclidean score IS
-        # the squared distance) — candidates stay broadcast-sized.
-        # Persisted: the frame feeds BOTH the total and the filter, and
-        # without the barrier each consumer re-runs the full argmin pass
-        scored = (
-            assign(pts, cand_frame(), id_col="id", vec_col="vec", metric="euclidean")
-            .select("id", F.col("score").alias("d2"))
-            .persist()
-        )
+        # d^2 to the nearest current candidate: the driver-held candidates
+        # in fit()'s per-row argmin (euclidean score IS the squared
+        # distance). Persisted: the frame feeds BOTH the total and the
+        # filter, and without the barrier each consumer re-runs the pass
+        d2 = _best_centroid(cands, "euclidean", "corrected").score
+        scored = pts.select("id", d2.alias("d2")).persist()
         total = scored.agg(F.sum("d2")).first()[0] or 0.0
         if total <= 0:
             scored.unpersist()
@@ -442,11 +459,10 @@ def init_centroids_parallel(
         scored.unpersist()
         cands.extend([[float(x) for x in row.vec] for row in new_rows])
 
-    # weights: points owned by each candidate (one broadcast argmin pass)
+    # weights: points owned by each candidate (one aggregate pass)
     C = np.array(cands, dtype=np.float64)
-    owners = assign(pts, cand_frame(), id_col="id", vec_col="vec", metric="euclidean")
-    w_rows = {r.cid: r.n for r in owners.groupBy("cid").agg(F.count("*").alias("n")).collect()}
-    weights = np.array([w_rows.get(i, 0) for i in range(len(cands))], dtype=np.float64)
+    owned = _lloyd_step(pts, cands, "euclidean", "corrected")
+    weights = np.array([owned.get(i, (0,))[0] for i in range(len(cands))], dtype=np.float64)
 
     # deterministic weighted farthest-point reduction to k
     chosen = [int(np.argmax(weights))]
@@ -462,11 +478,7 @@ def init_centroids_parallel(
             # empty-cluster tolerance of the Lloyd loop
             break
         chosen.append(nxt)
-    sel = C[chosen]
-    return spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(sel)],
-        "cid int, centroid array<double>",
-    )
+    return _centroid_frame(spark, C[chosen].tolist())
 
 
 def contingency(

@@ -641,11 +641,17 @@ def _decode_blocks(blob, fields, codec, sync, pos) -> list[dict]:
         elif codec == "bzip2":
             import bz2
 
-            block = bz2.decompress(block)
+            try:
+                block = bz2.decompress(block)
+            except (OSError, ValueError) as e:  # bad stream / truncated
+                raise AvroError(f"avro: corrupt bzip2 block ({e})")
         elif codec == "xz":
             import lzma
 
-            block = lzma.decompress(block)
+            try:
+                block = lzma.decompress(block)
+            except lzma.LZMAError as e:
+                raise AvroError(f"avro: corrupt xz block ({e})")
         elif codec == "snappy":
             block = _snappy_decompress(block)
         elif codec == "zstandard":

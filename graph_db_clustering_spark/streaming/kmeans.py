@@ -5,9 +5,10 @@
 Update rule = the public MLlib StreamingKMeans model (Spark docs,
 "streaming k-means" — itself the Sculley 2010 mini-batch rule with a
 forgetfulness knob): per micro-batch, points assign to their nearest
-centroid (the SAME broadcast-argmin `operators/kmeans.assign` the
-batch path uses — stream and batch share one implementation, like
-ann_serve_stream / cross-dedup), then each centroid moves to the
+centroid and the batch's per-cluster counts and vector sums come back
+in the SAME one-pass step (`operators/kmeans._lloyd_step`) the batch
+fit() loop runs — stream and batch share one implementation, like
+ann_serve_stream / cross-dedup — then each centroid moves to the
 count-weighted blend
 
     c' = (c * n * a + m * b) / (n * a + b),    n' = n * a + b
@@ -17,12 +18,12 @@ factor (a=1 -> the exact running mean over all data ever seen; a<1 ->
 exponential forgetting for drifting streams; a=0 -> only the newest
 batch matters).
 
-Scale shape: per batch, ONE broadcast-argmin assignment over the
-batch (the corpus-side never shuffles) and one (cid, pos)-keyed
-partial-sum aggregate (shuffled bytes O(k * dim), independent of
-batch size — the `update` plan's shape); driver state is the k x dim
-centroid matrix + k counts, O(k) per batch exactly like the batch
-fit() loop's driver traffic. State survives via the sink: each batch
+Scale shape: per batch, ONE hash aggregate over the batch — the
+driver-held centroids are a literal inside a per-row assignment
+expression (no join, no shuffle of the batch), and the map-side partial
+aggregate ships O(k * dim) values regardless of batch size; driver
+state is the k x dim centroid matrix + k counts, exactly the batch
+fit() loop's. State survives via the sink: each batch
 appends its post-update centroids stamped with the batch id, so the
 run is resumable and the trajectory is inspectable.
 """
@@ -58,36 +59,17 @@ class StreamingKMeans:
         self.metric = metric
         self.n_batches = 0
 
-    def _centroid_df(self, spark) -> DataFrame:
-        rows = [(i, [float(x) for x in c]) for i, c in enumerate(self.centroids)]
-        return spark.createDataFrame(rows, "cid int, centroid array<double>")
-
     def update_batch(self, batch_df: DataFrame, id_col: str, vec_col: str) -> None:
         """One mini-batch update (callable directly for batch tests)."""
-        from graph_db_clustering_spark.operators import kmeans as km
+        from graph_db_clustering_spark.operators.kmeans import _lloyd_step
 
-        spark = batch_df.sparkSession
-        cents = self._centroid_df(spark)
-        assigned = km.assign(
-            batch_df, cents, id_col=id_col, vec_col=vec_col, metric=self.metric
-        )
-        # per-cluster vector sums + counts: the update() plan shape —
-        # (cid, pos) partial sums, k*dim rows to the driver
-        member = batch_df.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-        ).join(assigned.select("id", "cid"), "id")
-        sums = (
-            member.select("cid", F.posexplode("vec").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(F.sum(F.col("x").cast("double")).alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        k, dim = self.centroids.shape
-        bsum = np.zeros((k, dim))
-        bcnt = np.zeros(k)
-        for r in sums:
-            bsum[r.cid, r.pos] = r.s
-            bcnt[r.cid] = r.n
+        vecs = batch_df.select(F.col(vec_col).alias("vec"))
+        stats = _lloyd_step(vecs, self.centroids.tolist(), self.metric, "corrected")
+        bsum = np.zeros(self.centroids.shape)
+        bcnt = np.zeros(len(self.centroids))
+        for cid, (_, n_vec, sums) in stats.items():
+            bsum[cid] = sums
+            bcnt[cid] = n_vec
         a = self.decay
         n_old = self.counts * a
         denom = n_old + bcnt

@@ -510,6 +510,25 @@ def test_corrupt_snappy_blocks_raise_avro_error(monkeypatch):
         decode(bytes([111]) + b"\x00" * 4)  # 22 * 5 + 1
 
 
+@pytest.mark.parametrize("codec", ["bzip2", "xz"])
+def test_corrupt_bzip2_and_xz_blocks_raise_avro_error(codec):
+    """A block that is not a bzip2/xz stream (a `null` container
+    relabelled) and a truncated real one are AvroErrors, not the stdlib
+    decoders' bare OSError/ValueError/LZMAError."""
+    schema = {"type": "record", "name": "r", "fields": [
+        {"name": "a", "type": "long"}, {"name": "b", "type": "string"}]}
+    rows = [{"a": i, "b": f"s{i}" * (i % 5)} for i in range(200)]
+    label = codec.encode()
+    relabelled = avro.encode_container(schema, rows, codec="null").replace(
+        b"\x08null", avro._write_varint(len(label)) + label)
+    with pytest.raises(avro.AvroError, match=f"corrupt {codec} block"):
+        avro.decode_container(relabelled)
+    header, count, block, sync = _single_block(
+        avro.encode_container(schema, rows, codec=codec))
+    with pytest.raises(avro.AvroError, match=f"corrupt {codec} block"):
+        avro.decode_container(_with_block(header, count, block[:-8], sync))
+
+
 def test_logical_types_roundtrip_and_spark_read(spark, tmp_path):
     """Avro logical types (round 11): date, timestamp-millis/micros,
     local-timestamp, decimal over bytes AND fixed — typed Python

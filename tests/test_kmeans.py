@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from graph_db_clustering_spark.catalog import load_table
+from graph_db_clustering_spark.functions.vectors import unit
 from graph_db_clustering_spark.operators import kmeans
 
 
@@ -61,10 +62,8 @@ def test_purity_in_unit_interval(points):
 
 
 def test_fit_failing_mid_loop_releases_its_pins(points, spark, monkeypatch):
-    """An iteration that raises after the assignments were persisted
-    leaves no cached frame behind: a failed fit has no result to own it.
-    Local checkpoints (the per-iteration centroids) are lineage
-    truncation, not cached frames, and are not counted."""
+    """An iteration that raises leaves no cached frame behind: a failed
+    fit has no result to own one."""
     points.count()  # the module fixture's own cache is not the fit's
 
     def cached():
@@ -72,14 +71,146 @@ def test_fit_failing_mid_loop_releases_its_pins(points, spark, monkeypatch):
         return sum(not r.isCheckpointed() for r in rdds)
 
     before = cached()
+    step = kmeans._lloyd_step
+    calls = []
 
     def boom(*a, **k):
-        raise RuntimeError("update failed")
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("step failed")
+        return step(*a, **k)
 
-    monkeypatch.setattr(kmeans, "update", boom)
-    with pytest.raises(RuntimeError, match="update failed"):
+    monkeypatch.setattr(kmeans, "_lloyd_step", boom)
+    with pytest.raises(RuntimeError, match="step failed"):
         kmeans.fit(points, k=2, max_iter=5)
     assert cached() <= before
+
+
+def _replay_fit(points, k, metric, parity, max_iter):
+    """The Lloyd's loop from the public steps over centroid frames:
+    cosine assigns unit vectors with metric="dot", as fit() did before
+    its centroids moved to the driver. Returns (history counts,
+    assignments, centroids)."""
+    spark = points.sparkSession
+    cents = kmeans.init_centroids(points, "vec_id", "embedding", k)
+    pts = points
+    if metric == "cosine":
+        pts = points.select("vec_id", unit(F.col("embedding")).alias("embedding"))
+    history, prev = [], None
+    for _ in range(max_iter):
+        scored = cents
+        if metric == "cosine":
+            scored = cents.select("cid", unit(F.col("centroid")).alias("centroid"))
+        a = kmeans.assign(pts, scored, metric="dot" if metric == "cosine" else metric,
+                          parity=parity)
+        a = spark.createDataFrame(a.collect(), a.schema)
+        counts = {r.cid: r.n for r in a.groupBy("cid").agg(F.count("*").alias("n")).collect()}
+        history.append(counts)
+        if counts == prev:
+            break
+        prev = counts
+        cents = kmeans.update(points, a, cents)
+        cents = spark.createDataFrame(cents.collect(), "cid int, centroid array<double>")
+    return history, sorted(a.collect()), sorted(cents.collect())
+
+
+@pytest.mark.parametrize("metric,parity,k", [
+    ("cosine", "corrected", 3),
+    ("euclidean", "corrected", 4),
+    ("dot", "corrected", 3),
+    ("cosine", "reference-bug", 2),
+])
+def test_fit_matches_loop_replayed_from_public_steps(points, metric, parity, k):
+    """fit()'s one-aggregate step reproduces the assign/update loop:
+    identical per-iteration counts and (id, cid, score) rows, centroids
+    within 1e-12."""
+    history, assigned, cents = _replay_fit(points, k, metric, parity, max_iter=6)
+    res = kmeans.fit(points, k=k, metric=metric, parity=parity, max_iter=6)
+    assert [h["counts"] for h in res.history] == history
+    assert sorted(res.assignments.collect()) == assigned
+    got = sorted(res.centroids.collect())
+    assert [r.cid for r in got] == [r.cid for r in cents]
+    for g, want in zip(got, cents):
+        assert g.centroid == pytest.approx(want.centroid, abs=1e-12)
+
+
+def test_fit_and_stream_update_job_budget(points, spark):
+    """A new driver barrier in the Lloyd's loop fails here without a
+    stopwatch: fit() runs at most two jobs per iteration (the aggregate's
+    map stage and its result) plus two for the initial sample, and one
+    streaming mini-batch update at most two."""
+    from graph_db_clustering_spark.streaming.kmeans import StreamingKMeans
+
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    res, n = jobs("kmeans-fit-budget", lambda: kmeans.fit(points, k=3, max_iter=3))
+    assert n <= 2 * res.iterations + 2, (n, res.iterations)
+    init = [[float(x) for x in r.embedding] for r in points.orderBy("vec_id").take(3)]
+    model = StreamingKMeans(init)
+    _, n = jobs("kmeans-stream-budget",
+                lambda: model.update_batch(points, "vec_id", "embedding"))
+    assert n <= 2, n
+    assert model.counts.sum() == points.count()
+
+
+def test_fit_empty_input_converges_empty(points):
+    res = kmeans.fit(points.limit(0), k=2, max_iter=5)
+    assert res.converged
+    assert res.centroids.count() == 0
+    assert res.assignments.count() == 0
+
+
+def test_fit_k_larger_than_n_gives_n_centroids(spark):
+    pts = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    res = kmeans.fit(pts, k=5, max_iter=5)
+    assert res.converged
+    assert sorted(r.cid for r in res.centroids.collect()) == [0, 1, 2]
+    assert sorted(r.id for r in res.assignments.collect()) == [0, 1, 2]
+
+
+def test_fit_null_embedding_counts_in_size_not_mean(spark):
+    """A NULL vector is assigned (its score is NULL, and NULL sorts first)
+    and counts toward its cluster's size, but not toward its mean. Ids 0
+    and 2 are the two the deterministic sample picks, so the NULL is never
+    an initial centroid."""
+    pts = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [3.0, 0.0]), (2, [0.0, 1.0]), (3, [0.0, 3.0]), (4, None)],
+        "vec_id long, embedding array<double>",
+    )
+    res = kmeans.fit(pts, k=2, metric="euclidean", max_iter=5)
+    assert res.converged
+    assert res.history[-1]["counts"] == {0: 3, 1: 2}
+    assert {r.cid: list(r.centroid) for r in res.centroids.collect()} == {
+        0: [2.0, 0.0], 1: [0.0, 2.0]}
+    null_row = [r for r in res.assignments.collect() if r.id == 4]
+    assert [(r.cid, r.score) for r in null_row] == [(0, None)]
+
+
+def test_fit_initial_centroids_skip_null_embeddings(spark):
+    """Id 0 is first in the deterministic sample order, but its vector is
+    NULL: the initial centroids are sampled from the non-null vectors
+    (ids 2 and 4), so no NULL centroid swallows every point in the first
+    iteration."""
+    pts = spark.createDataFrame(
+        [(0, None), (1, [0.0, 2.0]), (2, [0.0, 1.0]), (3, [2.0, 0.0]), (4, [1.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    res = kmeans.fit(pts, k=2, metric="euclidean", max_iter=5)
+    assert [h["counts"] for h in res.history] == [{0: 3, 1: 2}] * 2
+    assert {r.cid: list(r.centroid) for r in res.centroids.collect()} == {
+        0: [0.0, 1.5], 1: [1.5, 0.0]}
+
 
 def test_empty_cluster_keeps_previous_centroid(points, spark):
     cents = kmeans.init_centroids(points, "vec_id", "embedding", 2)
