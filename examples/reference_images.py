@@ -43,7 +43,7 @@ def main(image_dir: str = "/root/reference/data", k: int = 2):
         ).alias("meta"),
     )
     feats = multimodal.image_features(images, resize_to=(32, 32))
-    # cached: every Lloyd's iteration reads its input once
+    # cached: the fit, the count and the assignment below each read it
     named = feats.join(images.select(F.col("image_id").alias("id"), "name"), "id").cache()
     fit = kmeans.fit(named, k=k, id_col="id", vec_col="features", max_iter=10)
     assigned = kmeans.assign(named, fit.centroids, "id", "features").join(

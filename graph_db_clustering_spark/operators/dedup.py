@@ -703,7 +703,9 @@ def semantic_dedup(
     pruning semantically redundant web data at corpus scale.
 
     Scale shape: the clustering is the existing distributed Lloyd's
-    loop (broadcast centroids, O(k) driver traffic); the pair join is
+    loop (driver-held centroids, one per-row assignment plus one
+    count/vector-sum aggregate per iteration, O(k) driver traffic; fit
+    caches the representatives for its loop); the pair join is
     keyed on the cluster id, so its per-key work is bounded by the
     largest cluster (k is chosen to keep clusters ~ N/k, the paper's
     trade) and NEVER all-pairs; survivors come from the same sparse

@@ -32,6 +32,7 @@ Semantics notes (SURVEY §7.4):
 from __future__ import annotations
 
 import math
+from collections import defaultdict
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -168,18 +169,22 @@ class KMeansResult:
 
 
 def _sql(x) -> str:
-    """A double, or a (nested) list of them, as an exact SQL literal:
-    repr() round-trips, so the JVM parses back the driver's bits."""
+    """A double or None, or a (nested) list of them, as an exact SQL
+    literal: repr() round-trips, so the JVM parses back the driver's bits."""
     if isinstance(x, list):
         return "array(" + ", ".join(map(_sql, x)) + ")"
+    if x is None:
+        return "NULL"
     if math.isfinite(x):
         return repr(float(x)) + "D"
     return f"CAST('{x!r}' AS DOUBLE)"
 
 
-def _sum_squares(c: list[float]) -> float:
-    # a left fold from 0.0 in the order of functions/vectors' JVM
-    # aggregate, so driver-side norms are bit-identical to unit()/dot()
+def _sum_squares(c: list) -> float | None:
+    # a left fold from 0.0 in the order of functions/vectors' JVM aggregate
+    # (norms bit-identical to unit()/dot()); a NULL element makes it NULL
+    if None in c:
+        return None
     return reduce(lambda acc, x: acc + x * x, c, 0.0)
 
 
@@ -200,7 +205,11 @@ def _best_centroid(centroids: list, metric: str, parity: str) -> Column:
     is assign()'s min(struct) order: best score, then lowest cid."""
     dot = "aggregate(zip_with({}, {}, (x, y) -> double(x) * double(y)), 0D, (s, x) -> s + x)"
     if metric == "cosine":
-        centroids = [[x / math.sqrt(_sum_squares(c)) for x in c] for c in centroids]
+        # a zero vector has no direction: raise, as the JVM unit() does under ANSI
+        ss = [_sum_squares(c) for c in centroids]
+        if 0 in ss:
+            raise ValueError(f"cosine k-means: centroid {ss.index(0)} is a zero vector")
+        centroids = [[x / math.sqrt(n) if n else None for x in c] for c, n in zip(centroids, ss)]
         score = dot.format("u", "c")
     elif metric == "dot":
         score = dot.format("vec", "c")
@@ -236,16 +245,17 @@ def _lloyd_step(vecs: DataFrame, centroids: list, metric: str, parity: str) -> d
     {cid: (rows, non-null vectors, element-wise vector sum)} — k rows, one
     hash aggregate, so one map stage plus the result. A NULL vector counts
     toward its cluster's size but not toward its sum."""
+    # one parsed expression: dim sum() Columns cost a py4j round trip each
     dim = len(centroids[0]) if centroids else 0
-    sums = [F.sum(F.col("vec")[j].cast("double")) for j in range(dim)]
+    sums = F.expr(f"array({', '.join(f'sum(double(vec[{j}]))' for j in range(dim))})")
     best = _best_centroid(centroids, metric, parity)
     rows = (
         vecs.select(best.cid.alias("cid"), "vec")
         .groupBy("cid")
-        .agg(F.count("*"), F.count("vec"), *sums)
+        .agg(F.count("*"), F.count("vec"), sums)
         .collect()
     )
-    return {r[0]: (r[1], r[2], list(r[3:])) for r in rows}
+    return {r[0]: (r[1], r[2], r[3]) for r in rows}
 
 
 def fit(
@@ -263,34 +273,39 @@ def fit(
     `_lloyd_step` aggregate job, and the new centroids are the means of
     the non-null member vectors. Convergence: per-cluster assignment
     counts stable between iterations — the reference's criterion
-    (:589-592). Nothing is persisted: each iteration reads `points` once,
-    so cache an expensive input plan before the call. The result is lazy:
-    `assignments` is the per-row expression over `points`, against the
-    centroids of the last iteration that ran, so it re-reads the input —
-    checkpoint `points` first if its files are overwritten while the
-    result is in use.
+    (:589-592). The points are cached for the loop and released on
+    return, so the input plan runs once per fit and no cache outlives it.
+    The result is lazy: `assignments` is the per-row expression over
+    `points`, against the centroids of the last iteration that ran, so it
+    re-reads the input — checkpoint `points` first if its files are
+    overwritten while the result is in use. Cosine raises ValueError on a
+    zero-vector centroid (a sampled zero point, or members summing to 0).
     """
     pts = points.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    init = init_centroids(pts.where(F.col("vec").isNotNull()), "id", "vec", k)
-    centroids = [r.centroid for r in sorted(init.collect())]
     prev_counts: dict | None = None
     history: list[dict] = []
     converged = False
     it = 0
-    assigned_to = centroids
-    for it in range(1, max_iter + 1):
+    pts.cache()
+    try:
+        init = init_centroids(pts.where(F.col("vec").isNotNull()), "id", "vec", k)
+        centroids = [r.centroid for r in sorted(init.collect())]
         assigned_to = centroids
-        stats = _lloyd_step(pts, centroids, metric, parity)
-        counts = {cid: n for cid, (n, _, _) in stats.items()}
-        history.append({"iteration": it, "counts": counts})
-        if counts == prev_counts:
-            converged = True
-            break
-        prev_counts = counts
-        centroids = list(centroids)
-        for cid, (_, n_vec, sums) in stats.items():
-            if n_vec:  # a cluster with no non-null member keeps its centroid
-                centroids[cid] = [s / n_vec for s in sums]
+        for it in range(1, max_iter + 1):
+            assigned_to = centroids
+            stats = _lloyd_step(pts, centroids, metric, parity)
+            counts = {cid: n for cid, (n, _, _) in stats.items()}
+            history.append({"iteration": it, "counts": counts})
+            if counts == prev_counts:
+                converged = True
+                break
+            prev_counts = counts
+            centroids = list(centroids)
+            for cid, (_, n_vec, sums) in stats.items():
+                if n_vec:  # a cluster with no non-null member keeps its centroid
+                    centroids[cid] = [None if s is None else s / n_vec for s in sums]
+    finally:
+        pts.unpersist()
     best = _best_centroid(assigned_to, metric, parity)
     assignments = pts.select("id", best.alias("m")).select("id", "m.cid", "m.score")
     return KMeansResult(
@@ -491,6 +506,17 @@ def contingency(
     return a.join(b, "__id").groupBy("cid", "label").agg(F.count("*").alias("n"))
 
 
+def _marginals(assignments: DataFrame, labels: DataFrame, id_col: str, label_col: str):
+    """(contingency rows, per-cluster sizes, per-label sizes, n)."""
+    rows = contingency(assignments, labels, id_col, label_col).collect()
+    a_sum: dict = defaultdict(int)
+    b_sum: dict = defaultdict(int)
+    for r in rows:
+        a_sum[r.cid] += r.n
+        b_sum[r.label] += r.n
+    return rows, a_sum, b_sum, sum(a_sum.values())
+
+
 def adjusted_rand_index(
     assignments: DataFrame, labels: DataFrame, id_col: str, label_col: str
 ) -> float:
@@ -498,19 +524,9 @@ def adjusted_rand_index(
     between the clustering and ground-truth labels. 1.0 = identical
     partitions, ~0 = random. All pair counting happens on the k x L
     contingency table (collected — it is O(k*L), not data-sized)."""
-    rows = contingency(assignments, labels, id_col, label_col).collect()
-    from collections import defaultdict
-
-    a_sum: dict = defaultdict(int)
-    b_sum: dict = defaultdict(int)
-    n = 0
-    sum_comb = 0.0
+    rows, a_sum, b_sum, n = _marginals(assignments, labels, id_col, label_col)
     comb2 = lambda x: x * (x - 1) / 2.0  # noqa: E731
-    for r in rows:
-        a_sum[r.cid] += r.n
-        b_sum[r.label] += r.n
-        n += r.n
-        sum_comb += comb2(r.n)
+    sum_comb = sum(comb2(r.n) for r in rows)
     sum_a = sum(comb2(x) for x in a_sum.values())
     sum_b = sum(comb2(x) for x in b_sum.values())
     total = comb2(n)
@@ -529,18 +545,7 @@ def normalized_mutual_info(
     """NMI with arithmetic-mean normalization: MI(U,V) /
     ((H(U)+H(V))/2), from the same tiny contingency table. 1.0 =
     identical partitions; 0 when either side is a single cluster."""
-    import math
-
-    rows = contingency(assignments, labels, id_col, label_col).collect()
-    from collections import defaultdict
-
-    a_sum: dict = defaultdict(int)
-    b_sum: dict = defaultdict(int)
-    n = 0
-    for r in rows:
-        a_sum[r.cid] += r.n
-        b_sum[r.label] += r.n
-        n += r.n
+    rows, a_sum, b_sum, n = _marginals(assignments, labels, id_col, label_col)
     if n == 0:
         return 1.0
     mi = 0.0

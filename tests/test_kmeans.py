@@ -212,6 +212,46 @@ def test_fit_initial_centroids_skip_null_embeddings(spark):
         0: [0.0, 1.5], 1: [1.5, 0.0]}
 
 
+def test_cosine_fit_rejects_a_zero_initial_centroid(spark):
+    """Ids 0 and 2 are the two the deterministic sample picks; id 2 is
+    the zero vector, which has no direction to measure a cosine to."""
+    pts = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [0.0, 0.0]), (3, [1.0, 1.0]), (4, [2.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="centroid 1 is a zero vector"):
+        kmeans.fit(pts, k=2, metric="cosine", max_iter=5)
+
+
+def test_cosine_fit_rejects_a_cluster_mean_of_zero(spark):
+    """Both initial centroids are (1, 0), so every point ties into
+    cluster 0, whose members sum to zero: the second iteration has a
+    zero centroid to normalize."""
+    pts = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [-1.0, 1.0]), (2, [1.0, 0.0]), (4, [-1.0, -1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="centroid 0 is a zero vector"):
+        kmeans.fit(pts, k=2, metric="cosine", max_iter=5)
+
+
+@pytest.mark.parametrize("metric", ["euclidean", "cosine"])
+def test_fit_with_null_elements_matches_replayed_loop(spark, metric):
+    """Id 5 is a sampled initial centroid with a NULL element: its scores
+    are NULL, which sort first, as in the assign/update loop; the driver
+    carries the NULL through its norms and literals instead of failing."""
+    pts = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [3.0, 1.0]), (2, [0.0, 1.0]), (3, [1.0, 3.0]),
+         (4, [2.0, 2.0]), (5, [None, 2.0])],
+        "vec_id long, embedding array<double>",
+    )
+    history, assigned, cents = _replay_fit(pts, 2, metric, "corrected", max_iter=5)
+    res = kmeans.fit(pts, k=2, metric=metric, max_iter=5)
+    assert [h["counts"] for h in res.history] == history
+    assert sorted(res.assignments.collect()) == assigned
+    assert sorted(res.centroids.collect()) == cents
+
+
 def test_empty_cluster_keeps_previous_centroid(points, spark):
     cents = kmeans.init_centroids(points, "vec_id", "embedding", 2)
     a = kmeans.assign(points, cents)
