@@ -103,12 +103,12 @@ def ivfpq_serve_query(index_path: str):
 def warm_python_workers(spark) -> None:
     """Spawn and warm the Arrow/pandas-UDF worker pool before timing.
 
-    The Python-crossing queries (image_features, ann_ivfpq) have measured
-    1.1s<->3.1s swings on identical code (VERDICT r3 item 6): the first
-    pandas-UDF job pays daemon + worker fork, numpy import, and Arrow
-    codepath JIT, and with worker reuse on (pinned in session.py) that
-    cost should be paid ONCE per JVM — so pay it here, outside the timed
-    region, with one trivial mapInPandas over every core's worker."""
+    The first pandas-UDF job pays the daemon start, one fork per core and
+    each worker's first numpy/pandas/pyarrow imports. With worker reuse on
+    (pinned in session.py) that is paid once per JVM, so pay it here,
+    outside the timed region, with one trivial mapInPandas over every
+    core's worker. Later tasks do not re-read pyspark.zip's directory:
+    the worker daemon (graph_db_clustering_spark/pyworker.py) stops that."""
 
     def _touch(batches):
         import numpy as np  # noqa: F401 — force the heavy import in the worker

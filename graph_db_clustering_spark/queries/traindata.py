@@ -1127,6 +1127,7 @@ def arrow_roundtrip(spark, sf_dir):
 
     import pyarrow as pa
     import pyarrow.ipc as ipc
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from graph_db_clustering_spark.sources.arrow_ipc import read_arrow_ipc
 
@@ -1138,10 +1139,13 @@ def arrow_roundtrip(spark, sf_dir):
     shutil.rmtree(root, ignore_errors=True)
     os.makedirs(root)
     pdf = o.toPandas()
+    # the slice's Spark schema, not pandas' inference: an empty or all-NULL
+    # string column would otherwise be written as Arrow null
+    schema = to_arrow_schema(o.schema)
     half = len(pdf) // 2
     for i, part in enumerate((pdf.iloc[:half], pdf.iloc[half:])):
-        tbl = pa.Table.from_pandas(part, preserve_index=False)
-        with ipc.new_file(os.path.join(root, f"part{i}.arrow"), tbl.schema) as w:
+        tbl = pa.Table.from_pandas(part, schema=schema, preserve_index=False)
+        with ipc.new_file(os.path.join(root, f"part{i}.arrow"), schema) as w:
             w.write_table(tbl)
     back = read_arrow_ipc(spark, root)
     return (

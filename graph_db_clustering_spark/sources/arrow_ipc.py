@@ -41,6 +41,8 @@ def _spark_ddl_for(schema) -> str:
         pa.bool_(): "boolean",
         pa.binary(): "binary",
         pa.date32(): "date",
+        # pandas writes an empty or all-None object column as Arrow null
+        pa.null(): "void",
     }
     parts = []
     for f in schema:

@@ -230,6 +230,48 @@ def test_arrow_ipc_stream_format(spark, tmp_path):
     assert df.count() == 30 and df.agg({"id": "sum"}).first()[0] == sum(range(30))
 
 
+def test_arrow_ipc_all_none_and_empty_columns(spark, tmp_path):
+    """pandas writes an empty or all-None object column as Arrow null;
+    it reads back as a NULL (void) column instead of being rejected."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.ipc as ipc
+
+    from graph_db_clustering_spark.sources.arrow_ipc import read_arrow_ipc
+
+    frames = {
+        "all_none": pd.DataFrame({"id": [1, 2, 3], "s": [None, None, None]}),
+        "empty": pd.DataFrame({"id": pd.Series([], dtype="int64"),
+                               "s": pd.Series([], dtype=object)}),
+    }
+    for name, pdf in frames.items():
+        tbl = pa.Table.from_pandas(pdf, preserve_index=False)
+        assert tbl.schema.field("s").type == pa.null()
+        d = tmp_path / name
+        d.mkdir()
+        with ipc.new_file(str(d / "f.arrow"), tbl.schema) as w:
+            w.write_table(tbl)
+        df = read_arrow_ipc(spark, str(d))
+        assert [f.dataType.simpleString() for f in df.schema.fields] == ["bigint", "void"]
+        assert sorted(df.collect()) == [(i, None) for i in pdf["id"]]
+
+
+def test_arrow_roundtrip_keeps_string_type_on_an_empty_slice(spark, sf_dir, tmp_path):
+    """arrow_roundtrip writes the slice with its Spark schema, so an empty
+    slice still reads back with o_orderpriority as string."""
+    import pyarrow.parquet as pq
+
+    from graph_db_clustering_spark.queries.traindata import arrow_roundtrip
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    orders = pq.read_table(f"{sf_dir}/orders.parquet")
+    pq.write_table(orders.slice(0, 0), str(sf / "orders.parquet"))
+    out = arrow_roundtrip(spark, str(sf))
+    assert out.schema["o_orderpriority"].dataType.simpleString() == "string"
+    assert out.collect() == []
+
+
 def test_graphml_roundtrip_and_algorithms(spark, tmp_path):
     """write_graphml -> read_graphml is the identity (typed node/edge
     attrs, XML escaping); the imported graph runs the algorithm
