@@ -4,12 +4,24 @@ star, built Pregel-style: each iteration is one join + one aggregate
 (aggregate_messages shape), with localCheckpoint() truncating lineage so a
 50-iteration run doesn't build a 50-deep plan.
 
+A vertex program is a join plus a group-by over the vertex and message
+relations (Pregelix), so the loops run on three private skeletons:
+``_fixpoint`` (a ``_chg``-flagged state per round, one probe job; CC, BFS
+and weighted SSSP via ``_min_relax``, label propagation, coreness),
+``_power_iteration`` (pagerank, personalized_pagerank) and ``_frontier``
+(multi_source_bfs, betweenness' forward phase). Each reports whether it
+converged; at the cap the exact algorithms warn or raise, while label
+propagation and PageRank stop by contract. k_core (shrinking state) and
+the Louvain sweeps keep their own loops.
+
 Scale posture: state per iteration is one row per vertex; messages shuffle
 keyed by vertex id (AQE handles skewed hubs); nothing ever materializes on
 the driver except the O(1) convergence scalar.
 """
 
 from __future__ import annotations
+
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -24,46 +36,69 @@ def _undirected_edges(edges: DataFrame) -> DataFrame:
     return fwd.unionAll(fwd.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
 
 
+def _fixpoint(edges: DataFrame, state: DataFrame, step, max_iter: int):
+    """Run ``step`` from ``state`` until no row changes or ``max_iter``
+    rounds; returns (state, converged). ``step(state)`` builds the next
+    state plus a boolean ``_chg`` column: the flag rides the update
+    projection, so each round is one lazily checkpointed frame that its
+    one-job probe materializes. ``edges`` (the caller's pin) is released
+    however the loop ends."""
+    try:
+        state = state.localCheckpoint(eager=False)
+        for _ in range(max_iter):
+            upd = step(state).localCheckpoint(eager=False)
+            changed = upd.filter(F.col("_chg")).limit(1).count()
+            state = upd.drop("_chg")
+            if not changed:
+                return state, True
+        return state, False
+    finally:
+        edges.unpersist()
+
+
+def _min_relax(state: DataFrame, msgs: DataFrame, col: str) -> DataFrame:
+    """One min-relaxation: ``msgs`` (id, _msg) are aggregated per vertex and
+    every vertex of ``state`` (id, col) keeps the smaller of its value and
+    its best message (``least`` skips NULLs, so an unreached vertex takes
+    the message); ``_chg`` marks a strict improvement."""
+    best = msgs.groupBy(VERTEX_ID).agg(F.min("_msg").alias("_msg"))
+    cur, m = F.col(col), F.col("_msg")
+    return state.join(best, VERTEX_ID, "left").select(
+        VERTEX_ID,
+        F.least(cur, m).alias(col),
+        (m.isNotNull() & (cur.isNull() | (m < cur))).alias("_chg"),
+    )
+
+
+def _warn_at_cap(op: str, max_iter: int) -> None:
+    msg = f"{op} stopped at max_iter={max_iter} before its fixpoint; the result may be partial"
+    warnings.warn(msg, RuntimeWarning, stacklevel=3)
+
+
 def connected_components(graph: Graph, max_iter: int = 50) -> DataFrame:
     """Undirected connected components by min-label propagation:
     every vertex starts labeled with its own id; each round it adopts the
     minimum label among itself and its neighbors; fixpoint = components.
-    Converges in O(diameter) rounds on the propagation frontier.
+    Converges in O(diameter) rounds on the propagation frontier; stopping
+    at ``max_iter`` first warns (RuntimeWarning) and returns the partial
+    labelling.
 
     Returns (id, component) where component = min vertex id in the
     component (deterministic canonical label).
     """
     (edges,) = pins.repin("graph_cc", _undirected_edges(graph.edges))
-    labels = graph.vertices.select(VERTEX_ID, F.col(VERTEX_ID).alias("component"))
-    labels = labels.localCheckpoint(eager=False)
-    for _ in range(max_iter):
+
+    def step(labels):
         # neighbor's current label, sent to each vertex
-        msgs = (
-            edges.join(labels, edges["b"] == labels[VERTEX_ID])
-            .select(F.col("a").alias(VERTEX_ID), F.col("component").alias("nbr"))
-            .groupBy(VERTEX_ID)
-            .agg(F.min("nbr").alias("nbr_min"))
+        msgs = edges.join(labels, edges["b"] == labels[VERTEX_ID]).select(
+            F.col("a").alias(VERTEX_ID), F.col("component").alias("_msg")
         )
-        # the change flag rides the update projection (r14): the old
-        # label is already in hand here, so detecting convergence needs
-        # no second pass over a new-vs-old join — one lazily
-        # checkpointed frame per round, materialized by the flag probe
-        upd = (
-            labels.join(msgs, VERTEX_ID, "left")
-            .select(
-                VERTEX_ID,
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                ).alias("component"),
-                (F.col("nbr_min") < F.col("component")).alias("_chg"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = upd.filter(F.col("_chg")).limit(1).count()
-        labels = upd.select(VERTEX_ID, "component")
-        if changed == 0:
-            break
-    edges.unpersist()
+        return _min_relax(labels, msgs, "component")
+
+    init = graph.vertices.select(VERTEX_ID, F.col(VERTEX_ID).alias("component"))
+    labels, converged = _fixpoint(edges, init, step, max_iter)
+    if not converged:
+        _warn_at_cap("connected_components", max_iter)
     return labels
 
 
@@ -74,48 +109,97 @@ def shortest_paths(graph: Graph, sources: DataFrame, max_iter: int = 50) -> Data
     Min-propagation like connected_components, but the propagated label is
     hop count: sources start at 0, every round each vertex takes
     min(own dist, min(neighbor dist) + 1); fixpoint in O(eccentricity)
-    rounds. Returns (id, dist) with dist NULL for unreachable vertices —
-    the multi-source form also gives "distance to nearest seed"
-    (label-propagation / BFS layering building block).
+    rounds (warning at ``max_iter`` like connected_components). Returns
+    (id, dist) with dist NULL for unreachable vertices — the multi-source
+    form also gives "distance to nearest seed" (label-propagation / BFS
+    layering building block).
     """
     (edges,) = pins.repin("graph_bfs", _undirected_edges(graph.edges))
     src = sources.select(VERTEX_ID).distinct().withColumn("dist", F.lit(0))
-    state = (
-        graph.vertices.select(VERTEX_ID)
-        .join(src, VERTEX_ID, "left")
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(max_iter):
+
+    def step(state):
         reached = state.filter(F.col("dist").isNotNull())
-        msgs = (
-            edges.join(reached, edges["b"] == reached[VERTEX_ID])
-            .select(F.col("a").alias(VERTEX_ID), (F.col("dist") + 1).alias("nd"))
-            .groupBy(VERTEX_ID)
-            .agg(F.min("nd").alias("nd"))
+        msgs = edges.join(reached, edges["b"] == reached[VERTEX_ID]).select(
+            F.col("a").alias(VERTEX_ID), (F.col("dist") + 1).alias("_msg")
         )
-        # change flag inline (r14, the connected_components shape): a
-        # vertex changes iff a message improves on its current dist —
-        # no new-vs-old join pass, one lazy checkpoint per round
-        upd = (
-            state.join(msgs, VERTEX_ID, "left")
-            .select(
-                VERTEX_ID,
-                F.least(
-                    F.coalesce("dist", "nd"), F.coalesce("nd", "dist")
-                ).alias("dist"),
-                (
-                    F.col("nd").isNotNull()
-                    & (F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
-                ).alias("_chg"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = upd.filter(F.col("_chg")).limit(1).count()
-        state = upd.select(VERTEX_ID, "dist")
-        if changed == 0:
-            break
-    edges.unpersist()
+        return _min_relax(state, msgs, "dist")
+
+    state, converged = _fixpoint(
+        edges, graph.vertices.select(VERTEX_ID).join(src, VERTEX_ID, "left"), step, max_iter
+    )
+    if not converged:
+        _warn_at_cap("shortest_paths", max_iter)
     return state
+
+
+def _power_iteration(graph, family, vertices, extra, init_rank, rank_of, max_iter, tol):
+    """The power iteration of pagerank and personalized_pagerank: base =
+    (id, deg, *extra) over ``vertices`` is pinned under ``family`` with the
+    edges; ranks start at ``init_rank`` (a Column over base) and each round
+    become ``rank_of(inflow Column, previous dangling mass)`` until the L1
+    change is below ``tol`` or ``max_iter`` rounds. Returns (id, rank)."""
+    out_deg = graph.edges.groupBy(F.col(EDGE_SRC).alias(VERTEX_ID)).agg(F.count("*").alias("deg"))
+    base, edges = pins.repin(
+        family,
+        vertices.join(out_deg, VERTEX_ID, "left").select(
+            VERTEX_ID, F.coalesce("deg", F.lit(0)).alias("deg"), *extra
+        ),
+        graph.edges.select(EDGE_SRC, EDGE_DST),
+    )
+    try:
+        ranks = base.select(VERTEX_ID, init_rank.alias("rank")).localCheckpoint(eager=False)
+        # dangling mass of the INITIAL ranks (vertices with no out-edges
+        # leak their rank) — computed once here; inside the loop the NEXT
+        # iteration's dangling mass rides the same aggregate as the
+        # convergence delta (3 driver-blocking jobs per iteration -> 1;
+        # same addends, so the redistribution is unchanged)
+        dangling = (
+            ranks.join(base, VERTEX_ID)
+            .filter(F.col("deg") == 0)
+            .agg(F.sum("rank"))
+            .first()[0]
+            or 0.0
+        )
+        inflow = F.coalesce(F.col("inflow"), F.lit(0.0))
+        for _ in range(max_iter):
+            with_deg = ranks.join(base, VERTEX_ID)
+            contribs = (
+                edges.join(with_deg, edges[EDGE_SRC] == with_deg[VERTEX_ID])
+                .select(F.col(EDGE_DST).alias(VERTEX_ID), (F.col("rank") / F.col("deg")).alias("c"))
+                .groupBy(VERTEX_ID)
+                .agg(F.sum("c").alias("inflow"))
+            )
+            # the new-ranks frame keeps the out-degree, so the convergence
+            # join below can fold the NEXT iteration's dangling mass into
+            # the delta aggregate: one driver-blocking job per iteration (it
+            # also materializes the lazy checkpoint) instead of three. NOTE
+            # the old-ranks join lives OUTSIDE the checkpointed frame — a
+            # checkpoint inherits its origin plan's size estimate, and a
+            # rank(t) x rank(t) join inside it would square that estimate
+            # every iteration (BigInteger blow-up in stats estimation)
+            new_ranks = (
+                base.join(contribs, VERTEX_ID, "left")
+                .select(VERTEX_ID, rank_of(inflow, dangling).alias("rank"), "deg")
+                .localCheckpoint(eager=False)
+            )
+            row = (
+                new_ranks.alias("n")
+                .join(ranks.alias("o"), VERTEX_ID)
+                .agg(
+                    F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("_delta"),
+                    F.sum(F.when(F.col("deg") == 0, F.col("n.rank"))).alias("_dang"),
+                )
+                .first()
+            )
+            delta = row["_delta"]
+            dangling = row["_dang"] or 0.0
+            ranks = new_ranks.select(VERTEX_ID, "rank")
+            if delta is not None and delta < tol:
+                break
+        return ranks
+    finally:
+        base.unpersist()
+        edges.unpersist()
 
 
 def pagerank(
@@ -135,80 +219,12 @@ def pagerank(
     n = v.count()
     if n == 0:
         return v.select(VERTEX_ID, F.lit(0.0).alias("rank"))
-    out_deg = graph.edges.groupBy(F.col(EDGE_SRC).alias(VERTEX_ID)).agg(
-        F.count("*").alias("deg")
+    def rank_of(inflow, dangling):
+        return F.lit((1.0 - damping) / n) + F.lit(damping) * (inflow + F.lit(dangling / n))
+
+    return _power_iteration(
+        graph, "graph_pagerank", v, [], F.lit(1.0 / n), rank_of, max_iter, tol
     )
-    base, edges = pins.repin(
-        "graph_pagerank",
-        v.join(out_deg, VERTEX_ID, "left").select(
-            VERTEX_ID, F.coalesce("deg", F.lit(0)).alias("deg")
-        ),
-        graph.edges.select(EDGE_SRC, EDGE_DST),
-    )
-    ranks = base.select(VERTEX_ID, F.lit(1.0 / n).alias("rank")).localCheckpoint(
-        eager=False
-    )
-    # dangling mass of the INITIAL ranks (vertices with no out-edges leak
-    # their rank; redistributed uniformly) — computed once here; inside
-    # the loop the NEXT iteration's dangling mass rides the same
-    # aggregate as the convergence delta (r14: 3 driver-blocking jobs per
-    # iteration -> 1; same addends, so the redistribution is unchanged)
-    dangling = (
-        ranks.join(base, VERTEX_ID)
-        .filter(F.col("deg") == 0)
-        .agg(F.sum("rank"))
-        .first()[0]
-        or 0.0
-    )
-    for _ in range(max_iter):
-        with_deg = ranks.join(base, VERTEX_ID)
-        contribs = (
-            edges.join(with_deg, edges[EDGE_SRC] == with_deg[VERTEX_ID])
-            .select(
-                F.col(EDGE_DST).alias(VERTEX_ID),
-                (F.col("rank") / F.col("deg")).alias("c"),
-            )
-            .groupBy(VERTEX_ID)
-            .agg(F.sum("c").alias("inflow"))
-        )
-        # the new-ranks frame keeps the out-degree, so the convergence
-        # join below can fold the NEXT iteration's dangling mass into the
-        # delta aggregate: one driver-blocking job per iteration (it also
-        # materializes the lazy checkpoint) instead of three. NOTE the
-        # old-ranks join lives OUTSIDE the checkpointed frame — a
-        # checkpoint inherits its origin plan's size estimate, and a
-        # rank(t) x rank(t) join inside it would square that estimate
-        # every iteration (BigInteger blow-up in stats estimation)
-        new_ranks = (
-            base.join(contribs, VERTEX_ID, "left")
-            .select(
-                VERTEX_ID,
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("inflow"), F.lit(0.0)) + F.lit(dangling / n))
-                ).alias("rank"),
-                "deg",
-            )
-            .localCheckpoint(eager=False)
-        )
-        row = (
-            new_ranks.alias("n")
-            .join(ranks.alias("o"), VERTEX_ID)
-            .agg(
-                F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("_delta"),
-                F.sum(F.when(F.col("deg") == 0, F.col("n.rank"))).alias("_dang"),
-            )
-            .first()
-        )
-        delta = row["_delta"]
-        dangling = row["_dang"] or 0.0
-        ranks = new_ranks.select(VERTEX_ID, "rank")
-        if delta is not None and delta < tol:
-            break
-    base.unpersist()
-    edges.unpersist()
-    return ranks
 
 
 def personalized_pagerank(
@@ -231,81 +247,20 @@ def personalized_pagerank(
     DataFrame of vertex ids — it joins, never collects: a million-seed
     personalization costs the same plan as one seed. Returns (id,
     rank) over ALL vertices; off-component vertices hold exact 0."""
-    v = graph.vertices.select(VERTEX_ID)
     src = sources.select(VERTEX_ID).distinct()
     s = src.count()
     if s == 0:
         raise ValueError("personalized_pagerank needs a non-empty source set")
-    out_deg = graph.edges.groupBy(F.col(EDGE_SRC).alias(VERTEX_ID)).agg(
-        F.count("*").alias("deg")
+    def rank_of(inflow, dangling):
+        teleport = F.lit(1.0 - damping) + F.lit(damping) * F.lit(dangling)
+        return F.lit(damping) * inflow + F.col("is_src") * F.lit(1.0 / s) * teleport
+
+    v = graph.vertices.select(VERTEX_ID).join(
+        src.withColumn("__is_src", F.lit(1)), VERTEX_ID, "left"
     )
-    base, edges = pins.repin(
-        "graph_ppr",
-        v.join(out_deg, VERTEX_ID, "left")
-        .join(src.withColumn("__is_src", F.lit(1)), VERTEX_ID, "left")
-        .select(
-            VERTEX_ID,
-            F.coalesce("deg", F.lit(0)).alias("deg"),
-            F.coalesce("__is_src", F.lit(0)).alias("is_src"),
-        ),
-        graph.edges.select(EDGE_SRC, EDGE_DST),
-    )
-    ranks = base.select(
-        VERTEX_ID, (F.col("is_src") / F.lit(float(s))).alias("rank")
-    ).localCheckpoint(eager=False)
-    # initial dangling mass once; per-iteration it rides the delta
-    # aggregate (r14, same fusion as pagerank: 3 jobs/iteration -> 1)
-    dangling = (
-        ranks.join(base, VERTEX_ID)
-        .filter(F.col("deg") == 0)
-        .agg(F.sum("rank"))
-        .first()[0]
-        or 0.0
-    )
-    for _ in range(max_iter):
-        with_deg = ranks.join(base, VERTEX_ID)
-        contribs = (
-            edges.join(with_deg, edges[EDGE_SRC] == with_deg[VERTEX_ID])
-            .select(
-                F.col(EDGE_DST).alias(VERTEX_ID),
-                (F.col("rank") / F.col("deg")).alias("c"),
-            )
-            .groupBy(VERTEX_ID)
-            .agg(F.sum("c").alias("inflow"))
-        )
-        # same fusion + stats-estimate caveat as pagerank: the old-ranks
-        # join stays outside the checkpointed frame
-        new_ranks = (
-            base.join(contribs, VERTEX_ID, "left")
-            .select(
-                VERTEX_ID,
-                (
-                    F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
-                    + F.col("is_src")
-                    * F.lit(1.0 / s)
-                    * (F.lit(1.0 - damping) + F.lit(damping) * F.lit(dangling))
-                ).alias("rank"),
-                "deg",
-            )
-            .localCheckpoint(eager=False)
-        )
-        row = (
-            new_ranks.alias("n")
-            .join(ranks.alias("o"), VERTEX_ID)
-            .agg(
-                F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("_delta"),
-                F.sum(F.when(F.col("deg") == 0, F.col("n.rank"))).alias("_dang"),
-            )
-            .first()
-        )
-        delta = row["_delta"]
-        dangling = row["_dang"] or 0.0
-        ranks = new_ranks.select(VERTEX_ID, "rank")
-        if delta is not None and delta < tol:
-            break
-    base.unpersist()
-    edges.unpersist()
-    return ranks
+    is_src = [F.coalesce("__is_src", F.lit(0)).alias("is_src")]
+    init = F.col("is_src") / F.lit(float(s))
+    return _power_iteration(graph, "graph_ppr", v, is_src, init, rank_of, max_iter, tol)
 
 
 def degree_oriented_edges(edges: DataFrame) -> DataFrame:
@@ -396,38 +351,39 @@ def k_core(graph: Graph, k: int, max_iter: int = 100) -> DataFrame:
     # keeping core_degree on the survivor frame lets the converged
     # round's degrees BE the result — the old shape re-derived them
     # with one more semi-join + aggregate pass after the loop
-    n_alive = alive.count()
-    converged = False
-    for _ in range(max_iter):
-        # degrees within the surviving vertex set: both endpoints alive
-        live_edges = edges.join(
-            alive.select(F.col(VERTEX_ID).alias("a")), "a", "leftsemi"
-        ).join(alive.select(F.col(VERTEX_ID).alias("b")), "b", "leftsemi")
-        deg = live_edges.groupBy(F.col("a").alias(VERTEX_ID)).agg(
-            F.count("*").alias("core_degree")
-        )
-        survivors = (
-            alive.join(deg, VERTEX_ID, "left")
-            .filter(F.coalesce(F.col("core_degree"), F.lit(0)) >= k)
-            .select(VERTEX_ID, F.col("core_degree"))
-            .localCheckpoint(eager=False)
-        )
-        n_surv = survivors.count()
-        if n_surv == n_alive:
-            converged = True
-            break
-        alive = survivors.select(VERTEX_ID)
-        n_alive = n_surv
+    try:
+        n_alive = alive.count()
+        converged = False
+        for _ in range(max_iter):
+            # degrees within the surviving vertex set: both endpoints alive
+            live_edges = edges.join(
+                alive.select(F.col(VERTEX_ID).alias("a")), "a", "leftsemi"
+            ).join(alive.select(F.col(VERTEX_ID).alias("b")), "b", "leftsemi")
+            deg = live_edges.groupBy(F.col("a").alias(VERTEX_ID)).agg(
+                F.count("*").alias("core_degree")
+            )
+            survivors = (
+                alive.join(deg, VERTEX_ID, "left")
+                .filter(F.coalesce(F.col("core_degree"), F.lit(0)) >= k)
+                .select(VERTEX_ID, F.col("core_degree"))
+                .localCheckpoint(eager=False)
+            )
+            n_surv = survivors.count()
+            if n_surv == n_alive:
+                converged = True
+                break
+            alive = survivors.select(VERTEX_ID)
+            n_alive = n_surv
+    finally:
+        edges.unpersist()
     if not converged:
         # an unconverged peel is NOT the k-core (it may keep vertices the
         # next rounds would strip, e.g. a long path peels 2 ends/round) —
         # never return it silently
-        edges.unpersist()
         raise RuntimeError(
             f"k_core did not converge in {max_iter} rounds; raise max_iter "
             "(peeling needs up to O(diameter) rounds on chain-like graphs)"
         )
-    edges.unpersist()
     # on the converged round survivors == alive, so the degrees computed
     # against `alive` are already the in-core degrees (all >= k >= 1, so
     # none are null)
@@ -449,10 +405,8 @@ def label_propagation(graph: Graph, max_iter: int = 10) -> DataFrame:
     min(struct(-cnt, label)) — the same no-sort top-1 shape as
     kmeans.assign."""
     (edges,) = pins.repin("graph_lpa", _undirected_edges(graph.edges))
-    labels = graph.vertices.select(
-        VERTEX_ID, F.col(VERTEX_ID).alias("community")
-    ).localCheckpoint(eager=False)
-    for _ in range(max_iter):
+
+    def step(labels):
         votes = (
             edges.join(labels, edges["b"] == labels[VERTEX_ID])
             .select(F.col("a").alias(VERTEX_ID), F.col("community").alias("nbr"))
@@ -466,26 +420,15 @@ def label_propagation(graph: Graph, max_iter: int = 10) -> DataFrame:
             )
             .select(VERTEX_ID, F.col("m.nbr").alias("new_community"))
         )
-        # change flag inline (r14, the connected_components shape): the
-        # old label is in hand at the update join, so convergence needs
-        # no new-vs-old join pass
-        upd = (
-            labels.join(best, VERTEX_ID, "left")
-            .select(
-                VERTEX_ID,
-                F.coalesce(F.col("new_community"), F.col("community")).alias(
-                    "community"
-                ),
-                (F.col("new_community") != F.col("community")).alias("_chg"),
-            )
-            .localCheckpoint(eager=False)
+        return labels.join(best, VERTEX_ID, "left").select(
+            VERTEX_ID,
+            F.coalesce(F.col("new_community"), F.col("community")).alias("community"),
+            (F.col("new_community") != F.col("community")).alias("_chg"),
         )
-        changed = upd.filter(F.col("_chg")).limit(1).count()
-        labels = upd.select(VERTEX_ID, "community")
-        if not changed:
-            break
-    edges.unpersist()
-    return labels
+
+    init = graph.vertices.select(VERTEX_ID, F.col(VERTEX_ID).alias("community"))
+    # stopping at max_iter is part of the contract: no warning
+    return _fixpoint(edges, init, step, max_iter)[0]
 
 
 def coreness(graph: Graph, max_iter: int = 100) -> DataFrame:
@@ -505,17 +448,9 @@ def coreness(graph: Graph, max_iter: int = 100) -> DataFrame:
     array (sort_array desc, count positions where value > position).
     Returns (id, coreness); isolated vertices have coreness 0."""
     (edges,) = pins.repin("graph_coreness", _undirected_edges(graph.edges))
-    deg = edges.groupBy(F.col("a").alias(VERTEX_ID)).agg(
-        F.count("*").alias("est")
-    )
-    est = (
-        graph.vertices.select(VERTEX_ID)
-        .join(deg, VERTEX_ID, "left")
-        .select(VERTEX_ID, F.coalesce(F.col("est"), F.lit(0)).alias("est"))
-        .localCheckpoint(eager=False)
-    )
-    converged = False
-    for _ in range(max_iter):
+    deg = edges.groupBy(F.col("a").alias(VERTEX_ID)).agg(F.count("*").alias("est"))
+
+    def step(est):
         nbr_vals = (
             edges.join(est, edges["b"] == est[VERTEX_ID])
             .select(F.col("a").alias(VERTEX_ID), F.col("est").alias("v"))
@@ -523,34 +458,22 @@ def coreness(graph: Graph, max_iter: int = 100) -> DataFrame:
             .agg(F.sort_array(F.collect_list("v"), asc=False).alias("vs"))
         )
         # H-index of vs (desc-sorted): count of i with vs[i] >= i+1
-        h = F.size(
-            F.filter(nbr_vals["vs"], lambda v, i: v >= i + F.lit(1))
-        ).alias("h")
+        h = F.size(F.filter(nbr_vals["vs"], lambda v, i: v >= i + F.lit(1))).alias("h")
         # estimates are non-increasing, so a vertex changes iff the
-        # h-index undercuts its current estimate — the flag rides the
-        # update projection (r14, the connected_components shape)
-        upd = (
-            est.join(nbr_vals.select(VERTEX_ID, h), VERTEX_ID, "left")
-            .select(
-                VERTEX_ID,
-                F.least(
-                    F.col("est"), F.coalesce(F.col("h"), F.lit(0))
-                ).alias("est"),
-                (F.coalesce(F.col("h"), F.lit(0)) < F.col("est")).alias("_chg"),
-            )
-            .localCheckpoint(eager=False)
+        # h-index undercuts its current estimate
+        h0 = F.coalesce(F.col("h"), F.lit(0))
+        return est.join(nbr_vals.select(VERTEX_ID, h), VERTEX_ID, "left").select(
+            VERTEX_ID, F.least(F.col("est"), h0).alias("est"), (h0 < F.col("est")).alias("_chg")
         )
-        changed = upd.filter(F.col("_chg")).limit(1).count()
-        est = upd.select(VERTEX_ID, "est")
-        if not changed:
-            converged = True
-            break
-    edges.unpersist()
+
+    init = (
+        graph.vertices.select(VERTEX_ID)
+        .join(deg, VERTEX_ID, "left")
+        .select(VERTEX_ID, F.coalesce(F.col("est"), F.lit(0)).alias("est"))
+    )
+    est, converged = _fixpoint(edges, init, step, max_iter)
     if not converged:
-        raise RuntimeError(
-            f"coreness did not converge in {max_iter} h-index rounds; "
-            "raise max_iter"
-        )
+        raise RuntimeError(f"coreness did not converge in {max_iter} h-index rounds")
     return est.select(VERTEX_ID, F.col("est").alias("coreness"))
 
 
@@ -577,61 +500,28 @@ def weighted_shortest_paths(
     fwd = graph.edges.select(
         F.col(EDGE_SRC).alias("a"), F.col(EDGE_DST).alias("b"), w.alias("w")
     )
-    (edges,) = pins.repin(
-        "graph_wsssp",
-        fwd
-        if directed
-        else fwd.unionAll(
-            fwd.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
-        ),
-    )
-    src = sources.select(VERTEX_ID).distinct().withColumn(
-        "dist", F.lit(0.0)
-    )
-    state = (
-        graph.vertices.select(VERTEX_ID)
-        .join(src, VERTEX_ID, "left")
-        .localCheckpoint(eager=False)
-    )
-    converged = False
-    for _ in range(max_iter):
+    if not directed:
+        fwd = fwd.unionAll(fwd.select(F.col("b").alias("a"), F.col("a").alias("b"), "w"))
+    (edges,) = pins.repin("graph_wsssp", fwd)
+    src = sources.select(VERTEX_ID).distinct().withColumn("dist", F.lit(0.0))
+
+    def step(state):
         reached = state.filter(F.col("dist").isNotNull())
-        msgs = (
-            edges.join(reached, edges["a"] == reached[VERTEX_ID])
-            .select(F.col("b").alias(VERTEX_ID), (F.col("dist") + F.col("w")).alias("nd"))
-            .groupBy(VERTEX_ID)
-            .agg(F.min("nd").alias("nd"))
+        msgs = edges.join(reached, edges["a"] == reached[VERTEX_ID]).select(
+            F.col("b").alias(VERTEX_ID), (F.col("dist") + F.col("w")).alias("_msg")
         )
-        # change flag inline (r14, the shortest_paths shape): a vertex
-        # relaxes iff a message improves its current distance
-        upd = (
-            state.join(msgs, VERTEX_ID, "left")
-            .select(
-                VERTEX_ID,
-                F.least(
-                    F.coalesce("dist", "nd"), F.coalesce("nd", "dist")
-                ).alias("dist"),
-                (
-                    F.col("nd").isNotNull()
-                    & (F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
-                ).alias("_chg"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = upd.filter(F.col("_chg")).limit(1).count()
-        state = upd.select(VERTEX_ID, "dist")
-        if not changed:
-            converged = True
-            break
-    edges.unpersist()
+        return _min_relax(state, msgs, "dist")
+
+    state, converged = _fixpoint(
+        edges, graph.vertices.select(VERTEX_ID).join(src, VERTEX_ID, "left"), step, max_iter
+    )
     if not converged:
         # unconverged relaxation is not "unreachable" — distances beyond
         # max_iter hops would silently read as NULL/too-large (the
         # coreness/k_core discipline: never return wrong results quietly)
         raise RuntimeError(
-            f"weighted_shortest_paths did not converge in {max_iter} "
-            "relaxation rounds; raise max_iter (rounds ~ shortest-path "
-            "hop depth)"
+            f"weighted_shortest_paths did not converge in {max_iter} relaxation "
+            "rounds; raise max_iter (rounds ~ shortest-path hop depth)"
         )
     return state
 
@@ -675,6 +565,34 @@ def bipartite_project(
     )
 
 
+def _frontier(edges: DataFrame, state: DataFrame, reduce, max_iter: int):
+    """Frontier expansion over (id, src, dist, *carried) pair state: each
+    round sends the previous round's new pairs one hop along ``edges`` (a,
+    b), ``reduce`` aggregates those messages per pair, and the (id, src)
+    pairs not yet in the state become the next frontier. Returns (state,
+    converged) once a round discovers nothing or after ``max_iter`` rounds."""
+    state = state.localCheckpoint(eager=False)
+    frontier = state
+    for _ in range(max_iter):
+        hop = edges.join(frontier, edges["b"] == frontier[VERTEX_ID]).select(
+            F.col("a").alias(VERTEX_ID), "src", (F.col("dist") + 1).alias("dist"),
+            *frontier.columns[3:],
+        )
+        # lazy checkpoints (the louvain discipline): the frontier probe
+        # materializes `new`; the union checkpoint materializes at its
+        # first reader next round — no eager-checkpoint jobs
+        new = (
+            reduce(hop)
+            .join(state.select(VERTEX_ID, "src"), [VERTEX_ID, "src"], "left_anti")
+            .localCheckpoint(eager=False)
+        )
+        if new.limit(1).count() == 0:
+            return state, True
+        state = state.unionAll(new).localCheckpoint(eager=False)
+        frontier = new
+    return state, False
+
+
 def multi_source_bfs(
     graph: Graph, sources: DataFrame, max_iter: int = 50
 ) -> DataFrame:
@@ -691,37 +609,22 @@ def multi_source_bfs(
     bounded by V*K with K chosen by the caller (see
     harmonic_centrality's landmark contract)."""
     (edges,) = pins.repin("graph_msbfs", _undirected_edges(graph.edges))
-    state = (
+
+    seeds = (
         sources.select(F.col(VERTEX_ID).alias("src"))
         .distinct()
-        .select(
-            F.col("src").alias(VERTEX_ID), "src", F.lit(0).alias("dist")
-        )
-        .localCheckpoint(eager=False)
+        .select(F.col("src").alias(VERTEX_ID), "src", F.lit(0).alias("dist"))
     )
-    frontier = state
-    for _ in range(max_iter):
-        msgs = (
-            edges.join(frontier, edges["b"] == frontier[VERTEX_ID])
-            .select(
-                F.col("a").alias(VERTEX_ID),
-                "src",
-                (F.col("dist") + 1).alias("dist"),
-            )
-            .groupBy(VERTEX_ID, "src")
-            .agg(F.min("dist").alias("dist"))
-        )
-        # lazy checkpoints (r14, the louvain discipline): the frontier
-        # probe materializes `new`; the union checkpoint materializes at
-        # its first reader next round — no eager-checkpoint jobs
-        new = msgs.join(
-            state.select(VERTEX_ID, "src"), [VERTEX_ID, "src"], "left_anti"
-        ).localCheckpoint(eager=False)
-        if new.limit(1).count() == 0:
-            break
-        state = state.unionAll(new).localCheckpoint(eager=False)
-        frontier = new
-    edges.unpersist()
+
+    def reduce(hop):
+        return hop.groupBy(VERTEX_ID, "src").agg(F.min("dist").alias("dist"))
+
+    try:
+        state, converged = _frontier(edges, seeds, reduce, max_iter)
+    finally:
+        edges.unpersist()
+    if not converged:
+        _warn_at_cap("multi_source_bfs", max_iter)
     return state
 
 
@@ -784,80 +687,61 @@ def betweenness_centrality(
     sit at diameter ~6-20, chains are the adversarial case."""
     (edges,) = pins.repin("graph_betweenness", _undirected_edges(graph.edges))
     srcs = (sources if sources is not None else graph.vertices).select(VERTEX_ID)
-    state = (
-        srcs.distinct()
-        .select(
-            F.col(VERTEX_ID),
-            F.col(VERTEX_ID).alias("src"),
-            F.lit(0).alias("dist"),
-            F.lit(1.0).alias("sigma"),
-        )
-        .localCheckpoint(eager=False)
+
+    seeds = srcs.distinct().select(
+        VERTEX_ID, F.col(VERTEX_ID).alias("src"), F.lit(0).alias("dist"), F.lit(1.0).alias("sigma")
     )
-    frontier = state
-    for _ in range(max_iter):
-        msgs = (
-            edges.join(frontier, edges["b"] == frontier[VERTEX_ID])
-            .select(
-                F.col("a").alias(VERTEX_ID),
-                "src",
-                (F.col("dist") + 1).alias("dist"),
-                "sigma",
-            )
-            .groupBy(VERTEX_ID, "src", "dist")
-            .agg(F.sum("sigma").alias("sigma"))
-        )
-        # lazy checkpoints (r14, the louvain discipline): the frontier
-        # probe materializes `new`; the union materializes at its next
-        # reader — no eager-checkpoint jobs in the forward phase
-        new = msgs.join(
-            state.select(VERTEX_ID, "src"), [VERTEX_ID, "src"], "left_anti"
+
+    def reduce(hop):
+        # path COUNTS: sigma(v, s) sums over the (s-)predecessors
+        return hop.groupBy(VERTEX_ID, "src", "dist").agg(F.sum("sigma").alias("sigma"))
+
+    try:
+        state, converged = _frontier(edges, seeds, reduce, max_iter)
+        if not converged:
+            _warn_at_cap("betweenness_centrality", max_iter)
+        max_d = state.agg(F.max("dist")).collect()[0][0] or 0
+        delta = state.select(VERTEX_ID, "src").withColumn(
+            "delta", F.lit(0.0)
         ).localCheckpoint(eager=False)
-        if new.limit(1).count() == 0:
-            break
-        state = state.unionAll(new).localCheckpoint(eager=False)
-        frontier = new
-    max_d = state.agg(F.max("dist")).collect()[0][0] or 0
-    delta = state.select(VERTEX_ID, "src").withColumn(
-        "delta", F.lit(0.0)
-    ).localCheckpoint(eager=False)
-    for d in range(max_d, 0, -1):
-        succ = (
-            state.filter(F.col("dist") == d)
-            .join(delta, [VERTEX_ID, "src"])
-            .select(
-                F.col(VERTEX_ID).alias("sv"),
-                "src",
-                F.col("sigma").alias("sigma_v"),
-                F.col("delta").alias("delta_v"),
+        for d in range(max_d, 0, -1):
+            succ = (
+                state.filter(F.col("dist") == d)
+                .join(delta, [VERTEX_ID, "src"])
+                .select(
+                    F.col(VERTEX_ID).alias("sv"),
+                    "src",
+                    F.col("sigma").alias("sigma_v"),
+                    F.col("delta").alias("delta_v"),
+                )
             )
-        )
-        pred_side = state.filter(F.col("dist") == d - 1).select(
-            VERTEX_ID, "src", F.col("sigma").alias("sigma_u")
-        )
-        contrib = (
-            edges.join(succ, edges["b"] == F.col("sv"))
-            .select(F.col("a").alias(VERTEX_ID), "src", "sigma_v", "delta_v")
-            .join(pred_side, [VERTEX_ID, "src"])
-            .groupBy(VERTEX_ID, "src")
-            .agg(
-                F.sum(
-                    F.col("sigma_u") / F.col("sigma_v") * (1.0 + F.col("delta_v"))
-                ).alias("c")
+            pred_side = state.filter(F.col("dist") == d - 1).select(
+                VERTEX_ID, "src", F.col("sigma").alias("sigma_u")
             )
-        )
-        delta = (
-            delta.join(contrib, [VERTEX_ID, "src"], "left")
-            .select(
-                VERTEX_ID,
-                "src",
-                (F.col("delta") + F.coalesce("c", F.lit(0.0))).alias("delta"),
+            contrib = (
+                edges.join(succ, edges["b"] == F.col("sv"))
+                .select(F.col("a").alias(VERTEX_ID), "src", "sigma_v", "delta_v")
+                .join(pred_side, [VERTEX_ID, "src"])
+                .groupBy(VERTEX_ID, "src")
+                .agg(
+                    F.sum(
+                        F.col("sigma_u") / F.col("sigma_v") * (1.0 + F.col("delta_v"))
+                    ).alias("c")
+                )
             )
-            # lazy: the next layer's succ join (or the final bc
-            # aggregate) materializes it
-            .localCheckpoint(eager=False)
-        )
-    edges.unpersist()
+            delta = (
+                delta.join(contrib, [VERTEX_ID, "src"], "left")
+                .select(
+                    VERTEX_ID,
+                    "src",
+                    (F.col("delta") + F.coalesce("c", F.lit(0.0))).alias("delta"),
+                )
+                # lazy: the next layer's succ join (or the final bc
+                # aggregate) materializes it
+                .localCheckpoint(eager=False)
+            )
+    finally:
+        edges.unpersist()
     bc = (
         delta.filter(F.col(VERTEX_ID) != F.col("src"))
         .groupBy(VERTEX_ID)
